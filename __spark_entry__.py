@@ -440,9 +440,9 @@ def q_lag_delta(spark, sf):
 
 
 def q_text_stats(spark, sf):
-    # single-row-group parquet → 1-task scan; the tokenization/regex work
-    # is the whole query, so spread it across the cores (guide §2.5)
-    docs = D.spread(load_table(spark, sf, "documents").select("doc_id", "text"))
+    # the tokenization/regex work is the whole query: spread fans it out by
+    # the one size rule (engine.fanout_partitions)
+    docs = engine.spread(load_table(spark, sf, "documents").select("doc_id", "text"))
     return T.with_text_stats(docs).select(
         "doc_id", "n_tokens", "n_subtokens", "punct_ratio", "stopword_ratio",
         F.round("quality", 6).alias("quality"), "fingerprint", "lang_pred",
@@ -450,9 +450,9 @@ def q_text_stats(spark, sf):
 
 
 def q_lang_distribution(spark, sf):
-    # spread: tokenize+stopword filters are the query's CPU; 1-task scan
-    # otherwise (single row group — see q_props_dynamic)
-    docs = D.spread(load_table(spark, sf, "documents").select("text"))
+    # tokenize+stopword filters are the query's CPU: spread fans them out
+    # by the one size rule (engine.fanout_partitions)
+    docs = engine.spread(load_table(spark, sf, "documents").select("text"))
     return (
         T.with_lang_id(docs)
         .groupBy("lang_pred")
@@ -476,17 +476,8 @@ def q_multimodal_meta(spark, sf):
     width/height/channels/frame-count without touching binary."""
     from varpulis_spark.operators import multimodal as MM
 
-    # spread gated at 4 MB (r14, VERDICT #1 re-adjudication): the fake-image
-    # encode is near-I/O-speed header packing, and the same-host noop A/B
-    # read ~1.9 s spread vs ~1.1 s unspread on the 0.6 MB sf0.1 input while
-    # sf1's 6.7 MB already favors the fan-out — below the floor the
-    # exchange + 32-task scheduling is pure cost. audio_meta keeps the
-    # unconditional spread: its PCM/feature kernel measured a 4× spread win
-    # at sf1 (heavy per byte). No-op at real scale (multi-split inputs).
-    docs = D.spread(
-        load_table(spark, sf, "documents").select("doc_id", "text"),
-        min_bytes=4 << 20,
-    )
+    # fan-out by the one size rule (engine.fanout_partitions)
+    docs = engine.spread(load_table(spark, sf, "documents").select("doc_id", "text"))
     # persist the encoded frame: meta and frame-sampling both consume it,
     # and without the cache Spark computes the encode mapInPandas TWICE
     # (one per join branch — no common-subexpression reuse across plan
@@ -515,7 +506,9 @@ def q_audio_meta(spark, sf):
     values themselves verify against numpy in tests/test_extensions.py."""
     from varpulis_spark.operators import multimodal as MM
 
-    docs = D.spread(load_table(spark, sf, "documents").select("doc_id", "text"))
+    # the PCM/feature kernel is the per-row cost: spread fans it out by the
+    # one size rule (engine.fanout_partitions)
+    docs = engine.spread(load_table(spark, sf, "documents").select("doc_id", "text"))
     enc = MM.encode_fake_audio(docs)
     feats = MM.audio_features(enc.select("doc_id", "audio"), frame=64, hop=32)
     return feats.groupBy("doc_id", "sample_rate").agg(
@@ -547,10 +540,10 @@ fn collatz_len(n0: int) -> int:
 stream Out = purchase
     .emit(event_id: event_id, user_id: user_id, steps: collatz_len(event_id % 100 + 1))
 """
-    # spread: the compiled-fn pandas UDF is the per-row cost; the 1-task
-    # single-row-group scan would serialize it (see q_props_dynamic)
+    # the compiled-fn pandas UDF is the per-row cost: spread fans it out by
+    # the one size rule (engine.fanout_partitions)
     s = Stream.events(spark, sf)
-    out = run_program(src, s._with(D.spread(s.df)))["Out"]
+    out = run_program(src, s._with(engine.spread(s.df)))["Out"]
     return out.select("event_id", "user_id", "steps")
 
 
@@ -620,24 +613,23 @@ def _footer_trained_centroids(sf: str, n_clusters: int | None):
     total = engine.parquet_num_rows(path)
     if total is None or total == 0 or total > 10_000:
         return None
+    import numpy as np
+    import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
     from varpulis_spark.operators.similarity import _lloyd_spherical
 
     t = pq.read_table(path, columns=["vec_id", "embedding"])
-    rows = [
-        (i, v)
-        for i, v in zip(t.column("vec_id").to_pylist(), t.column("embedding").to_pylist())
-        if v is not None
-    ]
-    if not rows:
+    t = t.filter(pc.is_valid(t.column("embedding")))
+    if t.num_rows == 0:
         return None  # operator's own empty-corpus path returns empty
     if n_clusters is None:
-        n_clusters = max(8, min(256, len(rows) // 64))
-    rows.sort(key=lambda r: r[0])
-    import numpy as np
-
-    m = np.array([r[1] for r in rows[:10_000]], dtype=np.float64)
+        n_clusters = max(8, min(256, t.num_rows // 64))
+    # stable id sort, as the list sort of the oracle twin
+    t = t.take(pc.sort_indices(t, sort_keys=[("vec_id", "ascending")]))
+    vecs = t.column("embedding").combine_chunks()[:10_000]
+    m = vecs.flatten().to_numpy(zero_copy_only=False).reshape(len(vecs), -1)
+    m = m.astype(np.float64)
     return _lloyd_spherical(m, n_clusters, iters=10, seed=42)
 
 
@@ -845,12 +837,10 @@ def q_props_dynamic(spark, sf):
     JSON `props` payload — Value::Map, value.rs:31-42): parse the JSON
     column, extract a dynamic field, filter + aggregate on it. Exercises
     from_json → Catalyst JsonToStructs with field pruning."""
-    # project to the two needed columns, then spread: the bench parquet is
-    # ONE row group, so the scan is a single task and the from_json parse —
-    # the query's entire CPU cost — ran on 1 of 32 cores (guide §2.5 input
-    # skew / §4: the JSON parse is the heavy per-row work; measured 2.8 s
-    # single-task at sf1). The exchange ships only (event_type, props).
-    ev = D.spread(Stream.events(spark, sf).df.select("event_type", "props"))
+    # project to the two needed columns, then spread: the from_json parse is
+    # the query's entire CPU cost, fanned out by the one size rule
+    # (engine.fanout_partitions). An exchange ships only (event_type, props).
+    ev = engine.spread(Stream.events(spark, sf).df.select("event_type", "props"))
     k = F.from_json(F.col("props"), "k long").getField("k")
     # conditional aggregation instead of filter-then-aggregate: Catalyst
     # pushes a post-projection filter back below the Project and
@@ -906,8 +896,8 @@ def q_score_mlp(spark, sf):
         with open(path, "wb") as f:
             f.write(make_mlp_onnx(w1, b1, w2, b2))
     # spread after the narrow projection: the ONNX batch inference is the
-    # per-row cost and the single-row-group scan would run it on one task
-    ev = D.spread(
+    # per-row cost, fanned out by the one size rule (engine.fanout_partitions)
+    ev = engine.spread(
         load_table(spark, sf, "events").select(
             "event_id",
             F.col("value").alias("f1"),

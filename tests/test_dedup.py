@@ -479,6 +479,18 @@ def test_dedup_clusters_transitive_closure(spark):
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10}
 
 
+def test_dedup_clusters_local_branch_keeps_id_type(spark):
+    """The driver union-find result comes back through Arrow with the
+    pairs' id type, and an empty pair graph gives an empty typed frame."""
+    pairs = spark.createDataFrame([(1, 2), (2, 5), (7, 8)], "id_a int, id_b int")
+    out = D.dedup_clusters(pairs)
+    assert out.dtypes == [("id", "int"), ("canon_id", "int")]
+    assert sorted(map(tuple, out.collect())) == [(1, 1), (2, 1), (5, 1), (7, 7), (8, 7)]
+    empty = D.dedup_clusters(spark.createDataFrame([], "id_a bigint, id_b bigint"))
+    assert empty.dtypes == [("id", "bigint"), ("canon_id", "bigint")]
+    assert empty.count() == 0
+
+
 def test_dedup_clusters_property_vs_union_find(spark, monkeypatch):
     """Random graphs: BOTH execution paths (driver union-find for small
     graphs, distributed min-label propagation above the threshold) must

@@ -3,6 +3,8 @@ the optimized plan, not just in intent — pushed filters, pruned scans,
 broadcast dimension joins, partial aggregation, no Python in join-compiled
 patterns (SURVEY §4)."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -166,8 +168,9 @@ def test_minhash_exchanges_carry_no_text(spark, sf_dir):
         section = m.group(1)
         if "RoundRobinPartitioning" in section:
             # spread()'s pre-UDF fan-out: only exists when the local input
-            # arrives as fewer splits than cores — a no-op on a real
-            # cluster (dedup.spread docstring), so it may carry text here
+            # arrives as fewer splits than the fan-out decision asks for —
+            # a no-op on a real cluster (engine.spread docstring), so it may
+            # carry text here
             continue
         assert "text#" not in section and "__t#" not in section, section
     D.release_caches()
@@ -230,3 +233,122 @@ def test_no_red_flags_in_any_driver_plan(spark, sf_dir):
         if "BatchEvalPython" in plan:
             flags.append((name, "row-at-a-time PythonUDF"))
     assert not flags, flags
+
+
+# ---------------------------------------------------------------------------
+# the one fan-out decision (engine.fanout_partitions)
+# ---------------------------------------------------------------------------
+
+
+def _formatted(df) -> str:
+    return df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
+
+
+def _pinned_exchanges(plan: str) -> list[str]:
+    """Partitioning of every explicit repartition(n, ...) exchange."""
+    import re
+
+    return re.findall(r"Arguments: (.+?), REPARTITION_BY_NUM", plan)
+
+
+def test_small_inputs_do_not_fan_out(spark, sf_dir):
+    """Below BYTES_PER_TASK of local input a kernel stage runs on one
+    partition: no round-robin spread, and every keyed pin (spread_keys,
+    the LSH/minshingle verify) is a single-partition exchange."""
+    from varpulis_spark.engine import BYTES_PER_TASK, load_table
+    from varpulis_spark.operators import dedup as D
+
+    for table in ("documents", "embeddings"):
+        assert os.path.getsize(f"{sf_dir}/{table}.parquet") < BYTES_PER_TASK
+    docs = load_table(spark, sf_dir, "documents")
+    frames = {
+        name: E.queries()[name](spark, sf_dir)
+        for name in ("text_stats", "ann_ivf", "ivf_near_dup", "minhash_near_dup")
+    }
+    frames["ngram_minshingle_pairs"] = D.ngram_minshingle_pairs(docs)
+    for name, df in frames.items():
+        plan = _formatted(df)
+        assert "RoundRobinPartitioning" not in plan, name
+        for part in _pinned_exchanges(plan):
+            assert part == "SinglePartition" or part.endswith(", 1)"), (name, part)
+    assert _pinned_exchanges(_formatted(frames["ivf_near_dup"]))  # the cluster pin
+    D.release_caches()
+
+
+def test_large_input_fans_out_to_default_parallelism(spark, tmp_path):
+    """One local parquet file larger than BYTES_PER_TASK x
+    defaultParallelism: the decision is defaultParallelism, and spread adds
+    the round-robin exchange because one file is one split."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from varpulis_spark import engine
+    from varpulis_spark.engine import BYTES_PER_TASK, fanout_partitions, read_parquet
+
+    par = spark.sparkContext.defaultParallelism
+    rng = np.random.default_rng(3)
+    n_rows = 64
+    blob = (BYTES_PER_TASK * par) // n_rows + 1024
+    path = str(tmp_path / "big.parquet")
+    pq.write_table(
+        pa.table({"k": np.arange(n_rows), "b": [rng.bytes(blob) for _ in range(n_rows)]}),
+        path,
+        compression="none",
+    )
+    assert os.path.getsize(path) > BYTES_PER_TASK * par
+    df = read_parquet(spark, path)
+    assert fanout_partitions(df) == par
+    assert f"RoundRobinPartitioning({par})" in _formatted(engine.spread(df))
+    (pin,) = _pinned_exchanges(_formatted(engine.spread_keys(df, ["k"])))
+    assert pin.startswith("hashpartitioning(k#") and pin.endswith(f", {par})"), pin
+
+
+def test_keyed_driver_same_rows_on_file_and_in_memory_input(spark, sf_dir):
+    """A keyed partition_driver query (forecast) gives identical rows on a
+    small parquet (one partition) and on the same rows as an in-memory
+    frame, whose unknown size keeps the defaultParallelism fan-out."""
+    from varpulis_spark.engine import fanout_partitions
+    from varpulis_spark.operators.forecast import forecast
+
+    s = Stream.events(spark, sf_dir).partition_by("user_id")
+    mem = spark.createDataFrame(s.df.toPandas(), s.df.schema)
+    assert fanout_partitions(s.df) == 1
+    assert fanout_partitions(mem) == spark.sparkContext.defaultParallelism
+
+    def rows(stream):
+        out = forecast(stream, ["signup", "purchase", "error"], warmup=10, first_cols=[])
+        return sorted(
+            out.select(
+                "user_id", "event_id", "next_step", "active_runs", "completion_prob"
+            ).collect()
+        )
+
+    got = rows(s)
+    assert got and got == rows(s._with(mem))
+
+
+def test_fanout_decision_is_logged(spark, sf_dir, caplog):
+    """Every decision leaves one DEBUG record on varpulis_spark.fanout:
+    applied or skipped, the input bytes, the partition count."""
+    import logging
+
+    from varpulis_spark import engine
+
+    docs = engine.load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    size = os.path.getsize(f"{sf_dir}/documents.parquet")
+    mem = spark.createDataFrame([(1, "a")], "doc_id long, text string")
+    par = spark.sparkContext.defaultParallelism
+    with caplog.at_level(logging.DEBUG, logger="varpulis_spark.fanout"):
+        engine.spread(docs)
+        engine.spread(mem)
+        engine.spread_keys(docs, ["doc_id"])
+    records = [r for r in caplog.records if r.name == "varpulis_spark.fanout"]
+    assert [r.getMessage() for r in records] == [
+        f"fan-out skipped at spread: input bytes {size}, 1 partitions",
+        f"fan-out applied at spread: input bytes unknown, {par} partitions",
+        f"fan-out skipped at fanout_partitions: input bytes {size}, 1 partitions",
+    ]
+    assert {r.levelno for r in records} == {logging.DEBUG}

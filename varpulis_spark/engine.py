@@ -14,6 +14,7 @@ itself. This module owns session defaults that matter at 100 TB:
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -38,6 +39,103 @@ BROADCAST_TABLES = frozenset({"region", "nation", "supplier", "part", "customer"
 
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+
+
+# Local scan bytes that earn one task of a CPU-heavy kernel stage. From a
+# same-host sweep at sf0.01 and sf0.1 (4 cores, SCALE.md "Fan-out"): at
+# 1 MiB the 0.6 MB sf0.1 documents table ran its shingling on one task
+# (minshingle 2.3x slower); at 128 KiB the ~0.2 MB event and embedding
+# tables of sf0.01 split in two for no gain; 256 KiB keeps every sf0.1
+# table but the documents on all cores and runs sf0.01 kernels on one task.
+BYTES_PER_TASK = 1 << 18
+
+_FANOUT_LOG = logging.getLogger("varpulis_spark.fanout")
+
+
+def _session_parallelism(spark: SparkSession) -> int:
+    """defaultParallelism, without the RDD API where it is missing (Spark
+    Connect has no sparkContext: fall back to the shuffle width)."""
+    try:
+        return spark.sparkContext.defaultParallelism
+    except Exception:  # noqa: BLE001 - Connect: the property raises
+        return int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
+
+
+def _scan_files(df: DataFrame) -> tuple[int, int | None]:
+    """(files, bytes) `df` scans, from the plan's file list (`inputFiles()`,
+    no job) and `os.stat`. Bytes are None when unknown: streaming and
+    in-memory frames (0 files), files no local stat can see (object
+    stores)."""
+    try:
+        files = [] if df.isStreaming else df.inputFiles()
+    except Exception:  # noqa: BLE001 - plan without a file index
+        files = []
+    total = 0
+    for f in files:
+        p = f[7:] if f.startswith("file://") else f
+        p = p[5:] if p.startswith("file:") else p
+        try:
+            total += os.stat(p).st_size
+        except OSError:
+            return len(files), None
+    return len(files), total if files else None
+
+
+def _fanout(df: DataFrame) -> tuple[int, int, int | None]:
+    """(partitions, scanned files, scanned bytes or None); the rule is
+    documented on `fanout_partitions`."""
+    n = _session_parallelism(df.sparkSession)
+    n_files, n_bytes = _scan_files(df)
+    if n_bytes is not None:
+        n = max(1, min(n, -(-n_bytes // BYTES_PER_TASK)))
+    return n, n_files, n_bytes
+
+
+def _log_fanout(site: str, applied: bool, n_bytes: int | None, n: int) -> None:
+    _FANOUT_LOG.debug(
+        "fan-out %s at %s: input bytes %s, %d partitions",
+        "applied" if applied else "skipped",
+        site,
+        "unknown" if n_bytes is None else n_bytes,
+        n,
+    )
+
+
+def fanout_partitions(df: DataFrame) -> int:
+    """Partition count for a CPU-heavy stage over `df`:
+    clamp(ceil(local scan bytes / BYTES_PER_TASK), 1, defaultParallelism),
+    where the scan bytes are `os.stat` sizes of the plan's `inputFiles()`
+    (no job). An unknown size (in-memory or streaming frames, files no
+    local stat sees) keeps defaultParallelism. Logs the decision at DEBUG
+    on the `varpulis_spark.fanout` logger, applied when it is more than
+    one partition."""
+    n, _files, n_bytes = _fanout(df)
+    _log_fanout("fanout_partitions", n > 1, n_bytes, n)
+    return n
+
+
+def spread(df: DataFrame) -> DataFrame:
+    """Fan `df` out to `fanout_partitions(df)` before a CPU-heavy kernel.
+    Adds a round-robin exchange only when the scan has fewer files than
+    that count: a small local input stays on its one split, and a
+    multi-split scan (every real cluster) is left alone. Files can split
+    further by maxPartitionBytes, so the file count undercounts only in the
+    direction that adds the exchange. Logs the decision like
+    `fanout_partitions`, applied when the exchange is added."""
+    n, n_files, n_bytes = _fanout(df)
+    applied = n_files < n
+    _log_fanout("spread", applied, n_bytes, n)
+    return df.repartition(n) if applied else df
+
+
+def spread_keys(df: DataFrame, keys: list[str]) -> DataFrame:
+    """Hash-repartition on `keys` to `fanout_partitions(df)` before a keyed
+    Python stage. Keys stay co-located at any count, and the explicit
+    count overrides AQE's byte-based coalescing, which would put a few MB
+    of events carrying minutes of NFA/DP work on 1-2 tasks of a large
+    input. It is the hash distribution the keyed op needs anyway, so no
+    extra shuffle is introduced."""
+    return df.repartition(fanout_partitions(df), *[F.col(k) for k in keys])
 
 
 def get_spark(app_name: str = "varpulis_spark", cores: int | None = None) -> SparkSession:

@@ -51,6 +51,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from varpulis_spark.engine import fanout_partitions, spread
+
 MERSENNE_PRIME = (1 << 61) - 1
 MAX_BUCKET = 64  # cap candidates per LSH bucket (skew guard)
 BUCKET_SALTS = 256  # fan-out of the level-1 capped aggregation (skew guard)
@@ -108,73 +110,6 @@ def release_caches() -> None:
     after consuming results when running many queries in one session."""
     while _PERSISTED:
         _PERSISTED.pop().unpersist()
-
-
-def _parallelism(df: DataFrame) -> int:
-    """Target partition count for CPU-heavy UDF stages, without touching
-    the RDD API (Spark Connect has no sparkContext)."""
-    spark = df.sparkSession
-    try:
-        return spark.sparkContext.defaultParallelism
-    except Exception:  # Spark Connect: fall back to the shuffle width
-        return int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-
-
-def spread(df: DataFrame, min_bytes: int = 0) -> DataFrame:
-    """Ensure at least default-parallelism partitions before a CPU-heavy UDF.
-
-    Small local files arrive as one input split, serializing Arrow-UDF work;
-    on a real cluster the scan already yields many splits and this is a
-    no-op. The split count is estimated from the scan's file list
-    (`inputFiles()`, plan-only — no job runs and no RDD conversion, so it
-    works under Spark Connect); files can split further by
-    maxPartitionBytes, so this undercounts only in the direction that
-    skips the extra shuffle.
-
-    ``min_bytes`` (r14): callers whose downstream kernel is CHEAP per byte
-    (near-I/O-speed header packing, e.g. the multimodal fake-image encode)
-    pass a floor; when the scan's files are locally stat-able and total
-    UNDER it, the fan-out is skipped — the exchange + 32-task scheduling
-    costs more than the kernel on inputs that small (measured: the
-    multimodal noop wall at a 0.6 MB sf0.1 input was ~1.9 s spread vs
-    ~1.1 s unspread, while at 6.7 MB sf1 spread already wins). Files that
-    cannot be stat-ed locally (object stores) are treated as large, so the
-    fan-out is kept — at real scale the input is multi-split and spread()
-    is a no-op anyway. Heavy-per-byte kernels (shingling, JSON parse, PCM
-    feature extraction — a measured 4× spread win at sf1) keep the
-    default min_bytes=0."""
-    target = _parallelism(df)
-    try:
-        files = df.inputFiles()
-        if len(files) >= target:
-            return df
-        if min_bytes > 0 and files:
-            total = 0
-            for f in files:
-                p = f[7:] if f.startswith("file://") else f
-                p = p[5:] if p.startswith("file:") else p
-                try:
-                    total += os.stat(p).st_size
-                except OSError:
-                    total = None  # non-local: assume large, keep the fan-out
-                    break
-            if total is not None and total < min_bytes:
-                return df
-    except Exception:
-        pass
-    return df.repartition(target)
-
-
-def spread_keys(df: DataFrame, keys: list[str]) -> DataFrame:
-    """Hash-repartition on `keys` to ≥ default parallelism before a
-    CPU-heavy keyed op (applyInPandas).
-
-    AQE's size-based shuffle coalescing is wrong for Python-stateful
-    stages: a few MB of events can carry minutes of NFA/DP work, and AQE
-    happily coalesces them onto 1-2 tasks. An explicit repartition(N, keys)
-    pins the partition count; it is the SAME hash distribution the keyed op
-    needs, so no extra shuffle is introduced."""
-    return df.repartition(_parallelism(df), *[F.col(k) for k in keys])
 
 
 # ---------------------------------------------------------------------------
@@ -975,7 +910,7 @@ def _bucket_pairs(banded: DataFrame, dedup_pairs: bool = True) -> DataFrame:
     level; the quadratic pair explosion runs pipelined on level-2's pinned
     partitions): AQE's size-based coalescing sees a few MB and would run
     the explode on 1-2 tasks."""
-    p = _parallelism(banded)
+    p = fanout_partitions(banded)
     salted = banded.withColumn(
         "__salt", F.pmod(F.xxhash64("id"), F.lit(BUCKET_SALTS))
     )
@@ -1045,7 +980,7 @@ def _bucket_verified_pairs(
     oracle and test_dedup parity). The pairwise agreement is the same
     numpy kernel: candidates that fail the threshold die in the kernel
     and never materialize, let alone shuffle."""
-    p = _parallelism(banded)
+    p = fanout_partitions(banded)
     stream = (
         banded.select("bucket", "id", "sig")
         .repartition(p, "bucket")
@@ -1948,8 +1883,8 @@ def ngram_minshingle_pairs(
       (id, sh); candidates join back by id — no per-pair recomputation
       (the r4 plan rebuilt both arrays inside the join projection:
       ~1.3e8 substring extractions for those 222K pairs);
-    - `spread()` pins UDF-free but CPU-heavy shingling to ≥ default
-      parallelism (a small parquet arrives as one split);
+    - `spread()` fans the UDF-free but CPU-heavy shingling out by the one
+      size rule (`engine.fanout_partitions`);
     - per-band blocks larger than `max_block` are SUBDIVIDED by the band's
       secondary minimum (one more minhash agreement), and residual
       over-cap sub-blocks verify exhaustively — nothing is truncated
@@ -2008,7 +1943,7 @@ def ngram_minshingle_pairs(
     # measured story); _minshingle_candidates remains the probe surface.
     return _minshingle_verified_pairs(
         keyed, bands=bands, max_block=max_block, scaled_t=scaled_t,
-        p=_parallelism(df),
+        p=fanout_partitions(df),
     )
 
 
@@ -2093,38 +2028,24 @@ def dedup_clusters(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
             if ra != rb:
                 lo, hi = (ra, rb) if ra < rb else (rb, ra)
                 parent[hi] = lo
-        out = [(x, find(x)) for x in sorted(nodes)]
-        id_t = dict(pairs.dtypes).get("id_a", "bigint")
-        # few partitions, not defaultParallelism: createDataFrame slices
-        # driver-local rows across 32 near-empty partitions, and every
-        # downstream op (size aggregate, join) then schedules 32 tiny
-        # tasks per stage (guide §2.2: fewer, larger partitions). Slice at
-        # the SOURCE (parallelize(out, n)) — a coalesce(1) on the default
-        # frame was tried and reverted: the merged task re-runs the Python
-        # evaluation handshake once per PARENT partition (~140 ms × 32 ≈
-        # 4.5 s per downstream subtree, measured). One partition per ~50k
-        # rows keeps tasks meaningful at the branch's 1M-edge ceiling.
-        n_slices = max(1, len(out) // 50_000 + (1 if len(out) % 50_000 else 0))
-        spark = pairs.sparkSession
-        # Spark Connect has no driver sparkContext (the property RAISES on
-        # a Connect session) — guard ONLY the attribute access, so real
-        # schema/type errors from parallelize/createDataFrame propagate
-        # instead of silently re-running down the default-slicing path
-        # (ADVICE r13)
-        try:
-            sc = spark.sparkContext
-        except Exception:  # noqa: BLE001 - Connect: property raises
-            sc = None
-        if sc is not None:
-            rdd = sc.parallelize(out, n_slices)
-            return spark.createDataFrame(rdd, f"id {id_t}, canon_id {id_t}")
-        return spark.createDataFrame(out, f"id {id_t}, canon_id {id_t}")
+        ids = sorted(nodes)
+        # Arrow createDataFrame: the rows ship to the JVM as record batches
+        # (one partition per batch), so no Python worker re-runs to
+        # materialize them downstream, as a Python-RDD source would
+        import pyarrow as pa
+        from pyspark.sql.types import StructField, StructType
+
+        id_t = pairs.schema["id_a"].dataType
+        table = pa.table({"id": ids, "canon_id": [find(x) for x in ids]})
+        return pairs.sparkSession.createDataFrame(
+            table, StructType([StructField("id", id_t), StructField("canon_id", id_t)])
+        )
     # distributed branch: edges (both orientations) derive from the cached
     # pairs with a map-side explode — no dedup shuffle (mined pairs are
     # distinct; propagation is correct under dups). p sizes from the exact
     # pair count already taken for the branch decision.
     n_edges = 2 * n_pairs
-    p = max(2, min(_parallelism(pairs), n_edges // 50_000 + 1))
+    p = max(2, min(fanout_partitions(pairs), n_edges // 50_000 + 1))
     persisted_pairs = pairs  # keep the persisted handle for the unpersist
     # localCheckpoint the doubled edge list ONCE, already hash-partitioned
     # on the join key (dst): the checkpointed RDD keeps its output
@@ -2283,7 +2204,7 @@ def simhash_near_dup_pairs(
             )
         ).alias("bucket"),
     )
-    p = _parallelism(banded)
+    p = fanout_partitions(banded)
     salted = banded.withColumn(
         "__salt", F.pmod(F.xxhash64("id"), F.lit(BUCKET_SALTS))
     )

@@ -437,7 +437,7 @@ def forecast(
     # fire time). Per-GROUP pandas construction (15k tiny DataFrames +
     # concat at sf1) dominated the wall over the model itself; measured
     # ~4 s → ~2 s at sf1.
-    from varpulis_spark.operators.dedup import spread_keys
+    from varpulis_spark.engine import spread_keys
     from varpulis_spark.operators.partition_driver import (
         collect_partition,
         sorted_key_bounds,

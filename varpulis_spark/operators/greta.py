@@ -18,9 +18,9 @@ count, but per-event propagated counts give every aggregate in O(n²):
 
 Spark lowering: per partition key the DP runs inside `applyInPandas` (the
 same shuffle shape as any keyed aggregation); the event-type prefilter
-pushes into the scan, and the shuffle is pinned at default parallelism
-(spread_keys) so AQE's size-based coalescing can't serialize the CPU-bound
-stage. The DP itself is vectorized:
+pushes into the scan, and the shuffle width is the one fan-out decision
+(spread_keys, engine.fanout_partitions) so AQE's size-based coalescing can't
+serialize the CPU-bound stage of a large input. The DP itself is vectorized:
 
 - no predicate, no `within`  → closed form (every non-empty ordered subset
   is a trend): count = 2^n − 1, events = n·2^(n−1), Σf = (Σ f)·2^(n−1) —

@@ -4,10 +4,11 @@ Spark's `groupBy(keys).applyInPandas` slices Arrow data per GROUP — at
 10k+ keys the slicing machinery dominates Python-stateful stages, and the
 key count scales with the corpus. The faster shape (measured on the SASE,
 forecast, and GRETA drivers: 1.7-2.8× at sf1): hash-repartition on the
-keys (`spread_keys` — co-locates every key AND pins width against AQE's
-byte-based coalescing), then ONE `mapInPandas` pass per partition with a
-global (keys, sort_cols) sort and numpy boundary slicing via factorize
-codes (null keys group together, matching groupBy's null-safe grouping).
+keys (`spread_keys` — co-locates every key at the width of the one
+fan-out decision, `engine.fanout_partitions`), then ONE `mapInPandas` pass
+per partition with a global (keys, sort_cols) sort and numpy boundary
+slicing via factorize codes (null keys group together, matching groupBy's
+null-safe grouping).
 
 Memory contract: one shuffle partition lives in pandas — size
 `spark.sql.shuffle.partitions` so partitions fit executors, the standard
@@ -67,7 +68,7 @@ def apply_per_key(
 ) -> DataFrame:
     """`run(key_tuple, group_pdf) -> pd.DataFrame` applied per key, driven
     per partition. Groups arrive sorted by `sort_cols`."""
-    from varpulis_spark.operators.dedup import spread_keys
+    from varpulis_spark.engine import spread_keys
 
     def run_partition(batches):
         pdf = collect_partition(batches)

@@ -1019,7 +1019,7 @@ def apply_pattern_batch(stream, pattern: Pattern) -> DataFrame:
         return pd.DataFrame(rows, columns=cols)
 
     if keys:
-        from varpulis_spark.operators.dedup import spread_keys
+        from varpulis_spark.engine import spread_keys
 
         out_cols = list(pattern.emit.keys())
 

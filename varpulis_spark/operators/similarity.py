@@ -29,6 +29,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from varpulis_spark.engine import fanout_partitions, spread, spread_keys
+
 
 _TOPK_SCHEMA = "query_id long, neighbor_id long, score double, rank int"
 
@@ -84,8 +86,6 @@ def cosine_topk(
             res = pd.DataFrame(out)
             yield res[np.isfinite(res["score"])]
 
-    from varpulis_spark.operators.dedup import spread
-
     local = spread(
         corpus_df.select(id_col, vec_col).filter(F.col(vec_col).isNotNull())
     ).mapInPandas(
@@ -123,9 +123,7 @@ def cosine_pairs(
 
     spark = corpus_df.sparkSession
     if n_blocks is None:
-        from varpulis_spark.operators.dedup import _parallelism
-
-        n_blocks = max(2, math.ceil(math.sqrt(2 * _parallelism(corpus_df))))
+        n_blocks = max(2, math.ceil(math.sqrt(2 * fanout_partitions(corpus_df))))
 
     base = corpus_df.select(id_col, vec_col).filter(
         F.col(vec_col).isNotNull()
@@ -140,7 +138,7 @@ def cosine_pairs(
         .drop("__j")
     )
 
-    def gemm(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def gemm(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         pa, pb = key
         ids = pdf[id_col].to_numpy(dtype=np.int64)
         m = np.array(pdf[vec_col].tolist(), dtype=np.float64)
@@ -249,15 +247,11 @@ def ivf_near_dup_pairs(
                 }
             )
 
-    # fan the assignment GEMM out (r14): the sf1 parquet arrives as 2
-    # splits, so the centroid-assignment mapInPandas ran on 2 of 32 cores
-    # (1.36 s job at sf1, profile_query). spread() is a no-op on real
-    # multi-split inputs.
-    from varpulis_spark.operators.dedup import spread
-
+    # assignment and per-cluster GEMM fan out by the one size rule
+    # (engine.fanout_partitions, via spread / spread_keys)
     assigned = spread(nonnull).mapInPandas(assign_iter, assign_schema)
 
-    def cluster_pairs(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def cluster_pairs(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(id_col, kind="mergesort").head(max_cluster)
         ids = pdf[id_col].to_numpy(dtype=np.int64)
         m = np.array(pdf[vec_col].tolist(), dtype=np.float64)
@@ -277,14 +271,6 @@ def ivf_near_dup_pairs(
         return pd.DataFrame(
             {"id_a": np.concatenate(out_a), "id_b": np.concatenate(out_b)}
         )
-
-    # pin the GEMM parallelism (r14): AQE's size-based coalescing sees a
-    # few MB of (cluster, id, vec) rows and ran the per-cluster GEMM on 2
-    # tasks at sf1 (profile_query job timeline) — the same
-    # cheap-bytes/heavy-CPU mismatch dedup.spread_keys documents. The
-    # explicit repartition pins the count on the SAME hash distribution
-    # the groupBy needs, so no extra exchange is introduced.
-    from varpulis_spark.operators.dedup import spread_keys
 
     return (
         spread_keys(assigned, ["cluster"])
@@ -547,8 +533,6 @@ def ivf_topk(
     ]
     q_by_id = {int(i): v for i, v in zip(qids, qm)}
 
-    from varpulis_spark.operators.dedup import spread
-
     assigned = spread(
         corpus_df.select(id_col, vec_col).filter(F.col(vec_col).isNotNull())
     ).withColumn(
@@ -660,8 +644,6 @@ def embedding_near_dup_streaming(
         if m.size:
             m /= np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
         return pd.Series([r.tolist() for r in m])
-
-    from .dedup import spread
 
     # spread before the hyperplane/normalize UDFs — a file-source micro-batch
     # arrives as one split per spool file, serializing the vector kernels
