@@ -222,10 +222,9 @@ def annotate_streaming_anomalies(
     streaming: dict, here: str | None = None
 ) -> None:
     """Stamp a `note` on any scenario whose p50 deviates >3x from the
-    committed idle twin (VERDICT r11 task 6: the contended r11 tws_ab
-    count_window p50 read 12.9 s vs 1.1 s idle with no in-artifact
-    provenance). Mutates the scenario dicts in place; the compact line
-    carries the note."""
+    committed idle twin (VERDICT r11 task 6: a contended r11 scenario p50
+    read 12.9 s vs 1.1 s idle with no in-artifact provenance). Mutates the
+    scenario dicts in place; the compact line carries the note."""
     ref = _committed_idle_streaming(here)
     if not isinstance(ref, dict):
         return
@@ -237,9 +236,6 @@ def annotate_streaming_anomalies(
         (streaming.get(n), _p50(ref.get(n)))
         for n in ("pattern_runcap", "trend_windowed", "dedup_history")
     ]
-    ref_ab = ref.get("tws_ab") or {}
-    for k, v in (streaming.get("tws_ab") or {}).items():
-        pairs.append((v, _p50(ref_ab.get(k))))
     for s, ref_p50 in pairs:
         if not isinstance(s, dict) or not ref_p50:
             continue

@@ -138,14 +138,7 @@ def _drive(
     # Pinned at first start via the query's own conf; restored after — the
     # batch suite keeps its 32.
     producer.write_warmup()
-    # ops attach their own query confs to the Stream (e.g. the RocksDB
-    # provider a TWS op needs — trend's auto engine resolves to tws since
-    # r12); honor them like streaming.start_query does
-    pinned = {
-        "spark.sql.shuffle.partitions": STREAM_SHUFFLE,
-        **(getattr(stream, "session_confs", None) or {}),
-        **(conf or {}),
-    }
+    pinned = {"spark.sql.shuffle.partitions": STREAM_SHUFFLE, **(conf or {})}
     saved: dict = {}
     for k, v in pinned.items():
         try:
@@ -513,246 +506,6 @@ def bench_dedup_history(spark, workdir: str, docs_per_tick: int = 2048) -> dict:
     return _finish(acct, producer, lat_ms, alerts[0])
 
 
-# ---------------------------------------------------------------------------
-# scenario 4: TWS engine A/B (VERDICT r10 task 5) — the same op on the
-# applyInPandasWithState arm and the transformWithStateInPandas twin, so the
-# default can be flipped on measurement, not architecture taste.
-# ---------------------------------------------------------------------------
-
-
-def _events_batchmaker(rows_per_tick: int, users: int, seed0: int):
-    def make_batch(i: int, w_us: int):
-        n = rows_per_tick
-        rng = np.random.default_rng(seed0 + i)
-        return pa.table(
-            {
-                "event_type": pa.array(["purchase"] * n),
-                "user_id": pa.array(rng.integers(0, users, n), type=pa.int64()),
-                "value": pa.array(rng.uniform(0, 100, n)),
-                "ts": pa.array([w_us] * n, type=pa.timestamp("us", tz="UTC")),
-                "ingest_us": pa.array([w_us] * n, type=pa.int64()),
-                "event_id": pa.array(
-                    np.arange(i * n, (i + 1) * n), type=pa.int64()
-                ),
-                # ~8 fresh distinct buckets per tick (for the distinct A/B):
-                # steady emission rate without unbounded per-tick fan-out
-                "bucket": pa.array(
-                    rng.integers(0, 8 + i * 8, n), type=pa.int64()
-                ),
-            }
-        )
-
-    return make_batch
-
-
-_EVENTS_SCHEMA_FIELDS = [
-    ("event_type", "string"), ("user_id", "long"), ("value", "double"),
-    ("ts", "timestamp"), ("ingest_us", "long"), ("event_id", "long"),
-    ("bucket", "long"),
-]
-
-
-def _events_schema():
-    from pyspark.sql.types import (
-        DoubleType, LongType, StringType, StructField, StructType,
-        TimestampType,
-    )
-
-    t = {"string": StringType(), "long": LongType(), "double": DoubleType(),
-         "timestamp": TimestampType()}
-    return StructType(
-        [StructField(n, t[ty]) for n, ty in _EVENTS_SCHEMA_FIELDS]
-    )
-
-
-def bench_count_window_engine(
-    spark, workdir: str, engine: str, rows_per_tick: int = 2000,
-    users: int = 64,
-) -> dict:
-    """Tumbling count window (size 20, keyed by user) on the selected
-    stateful engine; latency = now − ingest of the window's LAST row."""
-    import varpulis_spark.streaming as S
-
-    spool = os.path.join(workdir, f"cw_{engine}_spool")
-    os.makedirs(spool)
-    src = S.file_source(spark, spool, _events_schema(), order_col="event_id")
-    out = S.count_window_streaming(
-        src.partition_by("user_id"), 20,
-        {"n": ("count", None), "done_us": ("last", "ingest_us")},
-        engine=engine,
-    )
-    lat_ms: list[float] = []
-    alerts = [0]
-    producer = _Producer(
-        spool, _events_batchmaker(rows_per_tick, users, 4000), DURATION_S,
-        TICK_S,
-    )
-
-    def sink(df, epoch):
-        rows = df.select("done_us").collect()
-        if not producer.measuring:
-            return
-        now = _now_us()
-        alerts[0] += len(rows)
-        lat_ms.extend((now - int(r.done_us)) / 1000.0 for r in rows)
-
-    acct = _drive(
-        spark, out, sink, producer,
-        os.path.join(workdir, f"ckpt_cw_{engine}"), conf=ROCKSDB_CONF,
-    )
-    return _finish(acct, producer, lat_ms, alerts[0])
-
-
-def bench_distinct_engine(
-    spark, workdir: str, engine: str, rows_per_tick: int = 2000,
-    users: int = 64,
-) -> dict:
-    """distinct(bucket) with a 10 s event-time TTL on the selected engine —
-    exercises the timeout machinery (hand-rolled EventTimeTimeout arm vs
-    NATIVE registerTimer/handleExpiredTimer); latency = now − ingest of the
-    emitted first-occurrence row."""
-    import varpulis_spark.streaming as S
-
-    spool = os.path.join(workdir, f"dist_{engine}_spool")
-    os.makedirs(spool)
-    src = S.file_source(spark, spool, _events_schema(), order_col="event_id")
-    out = S.distinct_streaming(src, "bucket", ttl="10s", engine=engine)
-    lat_ms: list[float] = []
-    alerts = [0]
-    producer = _Producer(
-        spool, _events_batchmaker(rows_per_tick, users, 5000), DURATION_S,
-        TICK_S,
-    )
-
-    def sink(df, epoch):
-        rows = df.select("ingest_us").collect()
-        if not producer.measuring:
-            return
-        now = _now_us()
-        alerts[0] += len(rows)
-        lat_ms.extend((now - r.ingest_us) / 1000.0 for r in rows)
-
-    acct = _drive(
-        spark, out, sink, producer,
-        os.path.join(workdir, f"ckpt_dist_{engine}"), conf=ROCKSDB_CONF,
-    )
-    return _finish(acct, producer, lat_ms, alerts[0])
-
-
-def bench_trend_bigbuf_engine(
-    spark, workdir: str, engine: str, users: int = 8,
-    rows_per_tick: int = 2048,
-) -> dict:
-    """LARGE-buffer stateful A/B (VERDICT r11 task 4): unwindowed trend
-    with a rising-value predicate and a horizon longer than the run, so
-    the per-key DP tail GROWS to thousands of rows (256/key/tick × the
-    run's ~20 ticks ≈ 5k rows/key) — the regime where the TWS twin's
-    append-only ListState should beat the pandas arm's whole-buffer
-    pickle+unpickle per micro-batch. Latency from the monotonic per-key
-    n_events (tick index = ceil(n_events / rows_per_key))."""
-    import varpulis_spark.streaming as S
-
-    spool = os.path.join(workdir, f"tb_{engine}_spool")
-    os.makedirs(spool)
-    rows_per_key = rows_per_tick // users
-
-    def make_batch(i: int, w_us: int):
-        n = users * rows_per_key
-        rng = np.random.default_rng(7000 + i)
-        return pa.table(
-            {
-                "event_type": pa.array(["purchase"] * n),
-                "user_id": pa.array(
-                    np.repeat(np.arange(users), rows_per_key),
-                    type=pa.int64(),
-                ),
-                "value": pa.array(rng.uniform(0, 100, n)),
-                "ts": pa.array([w_us] * n, type=pa.timestamp("us", tz="UTC")),
-                "event_id": pa.array(
-                    np.arange(i * n, (i + 1) * n), type=pa.int64()
-                ),
-            }
-        )
-
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-        TimestampType,
-    )
-
-    schema = StructType(
-        [
-            StructField("event_type", StringType()),
-            StructField("user_id", LongType()),
-            StructField("value", DoubleType()),
-            StructField("ts", TimestampType()),
-            StructField("event_id", LongType()),
-        ]
-    )
-    src = S.file_source(spark, spool, schema, order_col="event_id")
-    rising = lambda cols, i: cols["value"][:i] < cols["value"][i]  # noqa: E731
-    out = S.trend_aggregate_streaming(
-        src.partition_by("user_id"), event_type="purchase",
-        value_field="value", within="1h", adjacent_vec=rising,
-        engine=engine,
-    )
-    lat_ms: list[float] = []
-    alerts = [0]
-    producer = _Producer(spool, make_batch, DURATION_S, _slow_tick())
-
-    def sink(df, epoch):
-        rows = df.select("user_id", "n_events").collect()
-        if not producer.measuring:
-            return
-        now = _now_us()
-        alerts[0] += len(rows)
-        ticks = producer.tick_times_us
-        for r in rows:
-            tick_idx = -(-int(r.n_events) // rows_per_key)  # ceil
-            if 0 < tick_idx <= len(ticks):
-                lat_ms.append((now - ticks[tick_idx - 1]) / 1000.0)
-
-    acct = _drive(
-        spark, out, sink, producer,
-        os.path.join(workdir, f"ckpt_tb_{engine}"), conf=ROCKSDB_CONF,
-    )
-    r = _finish(acct, producer, lat_ms, alerts[0])
-    r["tail_rows_per_key_at_end"] = rows_per_key * len(
-        producer.tick_times_us
-    )
-    return r
-
-
-def bench_tws_ab(spark, workdir: str) -> dict:
-    """count-window, distinct, and the large-buffer trend on BOTH stateful
-    engines, same offered load and store config (RocksDB for both — the
-    TWS requirement; the pandas arm runs on it too, measured r9 as its
-    best config)."""
-    from varpulis_spark import pbvendor
-
-    out: dict = {}
-    if not pbvendor.tws_available():
-        return {"skipped": "no google.protobuf runtime discoverable"}
-    for op, fn in (
-        ("count_window", bench_count_window_engine),
-        ("distinct", bench_distinct_engine),
-        ("trend_bigbuf", bench_trend_bigbuf_engine),
-    ):
-        for engine in ("pandas", "tws"):
-            sub = os.path.join(workdir, f"{op}_{engine}")
-            os.makedirs(sub)
-            try:
-                out[f"{op}_{engine}"] = fn(spark, sub, engine)
-            except Exception as e:  # noqa: BLE001
-                out[f"{op}_{engine}"] = {
-                    "error": f"{type(e).__name__}: {e}"[:300]
-                }
-    return out
-
-
 def run_streaming_bench(spark) -> dict:
     """All scenarios; returns the full per-scenario record plus the
     compact summary block bench.py stitches into its stdout line."""
@@ -761,7 +514,6 @@ def run_streaming_bench(spark) -> dict:
         "pattern_runcap": bench_pattern_runcap,
         "trend_windowed": bench_trend_windowed,
         "dedup_history": bench_dedup_history,
-        "tws_ab": bench_tws_ab,
     }
     for name, fn in scenarios.items():
         workdir = tempfile.mkdtemp(prefix=f"vstream_{name}_")
@@ -793,18 +545,6 @@ def compact_streaming(full: dict) -> dict:
         }
         if s.get("note"):
             c[name]["note"] = s["note"]
-    ab = full.get("tws_ab") or {}
-    if ab:
-        c["tws_ab"] = {
-            k: (
-                {"eps": v.get("sustained_eps"),
-                 "p50_ms": (v.get("latency_ms") or {}).get("p50"),
-                 **({"note": v["note"]} if v.get("note") else {})}
-                if "error" not in v and "skipped" not in str(k)
-                else {"error": str(v)[:80]}
-            ) if isinstance(v, dict) else v
-            for k, v in ab.items()
-        }
     return c
 
 

@@ -13,11 +13,12 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 # listed in slow_manifest.txt get the `slow` marker and pytest.ini's
 # `addopts = -m "not slow"` deselects them by default, so the round
 # driver's gate finishes inside its budget (it truncated at ~86% in r13).
-# One representative per critical family (TWS/RocksDB parity, checkpoint
-# restart, Kafka txn sink, scale_guard, plan red-flags, IVF planted
-# recall) is deliberately NOT in the manifest. The full suite remains one
-# flag away: `pytest tests/ -m "slow or not slow"` — run and recorded
-# green before round close (OPTIMIZATION_r14.md).
+# One representative per critical family (pattern parity on RocksDB
+# with changelog checkpointing, the store the streaming benchmark runs;
+# checkpoint restart, Kafka txn sink, scale_guard, plan red-flags, IVF
+# planted recall) is deliberately NOT in the manifest. The full suite
+# remains one flag away: `pytest tests/ -m "slow or not slow"` — run and
+# recorded green before round close (OPTIMIZATION_r14.md).
 _HERE = os.path.dirname(os.path.abspath(__file__))
 _REPO = os.path.dirname(_HERE)
 

@@ -86,7 +86,7 @@ def test_streaming_anomaly_notes(tmp_path):
     d = str(tmp_path)
     idle = {
         "pattern_runcap": _scenario(1000.0),
-        "tws_ab": {"count_window_tws": _scenario(1100.0)},
+        "dedup_history": _scenario(1100.0),
     }
     _write_artifact(d, 11, gemm=0.2, streaming=idle)
     # newest idle twin wins over older rounds (numeric, not lexical, order)
@@ -96,12 +96,12 @@ def test_streaming_anomaly_notes(tmp_path):
     fresh = {
         "pattern_runcap": _scenario(1200.0),            # within 3x: no note
         "trend_windowed": _scenario(500.0),             # no twin: no note
-        "tws_ab": {"count_window_tws": _scenario(12864.0)},  # r11's 11.7x
+        "dedup_history": _scenario(12864.0),            # r11's 11.7x
     }
     bench.annotate_streaming_anomalies(fresh, d)
     assert "note" not in fresh["pattern_runcap"]
     assert "note" not in fresh["trend_windowed"]
-    note = fresh["tws_ab"]["count_window_tws"]["note"]
+    note = fresh["dedup_history"]["note"]
     assert "deviates >3x" in note and "1100" in note
 
 
@@ -114,11 +114,11 @@ def test_streaming_anomaly_note_reaches_compact_line(tmp_path):
     full = {
         "ref_flink_avg_alert_ms": 554,
         "pattern_runcap": s,
-        "tws_ab": {"distinct_tws": {**_scenario(4000.0), "note": "n2"}},
+        "dedup_history": {**_scenario(4000.0), "note": "n2"},
     }
     c = bench_streaming.compact_streaming(full)
     assert c["pattern_runcap"]["note"].startswith("p50 5000.0")
-    assert c["tws_ab"]["distinct_tws"]["note"] == "n2"
+    assert c["dedup_history"]["note"] == "n2"
 
 
 def test_compact_line_carries_degraded_flag():

@@ -9,6 +9,7 @@ them as micro-batches (the `.evt` timed-replay analog, event_file.rs:1-26),
 
 import os
 import shutil
+import sys
 
 import pytest
 from pyspark.sql import functions as F
@@ -229,128 +230,6 @@ def test_streaming_sliding_count_window(spark, sf_dir, replay_dir):
         )
     )
     assert got == exp and len(got) > 0
-
-
-def _tws_available():
-    from varpulis_spark import pbvendor
-
-    return pbvendor.tws_available()
-
-
-@pytest.mark.skipif(
-    not _tws_available(), reason="no google.protobuf runtime discoverable"
-)
-@pytest.mark.parametrize("size,slide", [(20, None), (50, 25)])
-def test_streaming_count_window_tws_parity(spark, sf_dir, replay_dir, size, slide):
-    """transformWithStateInPandas count-window twin must reproduce the
-    batch count-window result exactly — same windows, ids, and aggregates
-    as the applyInPandasWithState path it parallels (window.rs:274-444).
-    Exercises the arbitrary-state-v2 protocol end-to-end: native ListState
-    row buffer + ValueState cursor over RocksDB column families.
-
-    The RocksDB provider must be QUERY-scoped (start_query set→start→restore,
-    ADVICE r10): the session conf is asserted untouched afterwards."""
-    prev_provider = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None
-    )
-    schema = Stream.events(spark, sf_dir).df.schema
-    src = S.file_source(spark, replay_dir, schema, max_files_per_trigger=1)
-    out = S.count_window_streaming(
-        src.partition_by("user_id"), size,
-        {"n": ("count", None), "total": ("sum", "value")},
-        slide=slide, engine="tws",
-    )
-    name = f"tws_cw_{size}_{slide or 0}"
-    S.run_to_memory(out, name)
-    got = sorted(
-        (r.user_id, r.window_id, r.n, round(r.total, 6))
-        for r in spark.sql(f"SELECT * FROM {name}").collect()
-    )
-    exp = sorted(
-        (r.user_id, int(r.window_id), r.n, round(r.total, 6))
-        for r in (
-            Stream.events(spark, sf_dir)
-            .partition_by("user_id")
-            .window(size, sliding=slide)
-            .aggregate(n=A.count(), total=A.sum("value"))
-            .df.select("user_id", "window_id", "n", "total")
-            .collect()
-        )
-    )
-    assert got == exp and len(got) > 0
-    assert (
-        spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-        == prev_provider
-    ), "TWS op leaked the RocksDB provider into the session conf"
-
-
-@pytest.mark.skipif(
-    not _tws_available(), reason="no google.protobuf runtime discoverable"
-)
-def test_streaming_distinct_tws_parity(spark, sf_dir, replay_dir):
-    """transformWithStateInPandas distinct twin without TTL must equal
-    batch distinct-earliest exactly (same envelope rows)."""
-    prev_provider = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None
-    )
-    schema = Stream.events(spark, sf_dir).df.schema
-    src = S.file_source(spark, replay_dir, schema, max_files_per_trigger=1)
-    out = S.distinct_streaming(src, "user_id", "event_type", engine="tws")
-    S.run_to_memory(out, "tws_dist")
-    got = {
-        (r.user_id, r.event_type, r.event_id)
-        for r in spark.sql("SELECT * FROM tws_dist").collect()
-    }
-    exp = {
-        (r.user_id, r.event_type, r.event_id)
-        for r in (
-            Stream.events(spark, sf_dir)
-            .distinct("user_id", "event_type")
-            .select("user_id", "event_type", "event_id")
-            .df.collect()
-        )
-    }
-    assert got == exp and len(got) > 0
-    assert (
-        spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-        == prev_provider
-    ), "TWS op leaked the RocksDB provider into the session conf"
-
-
-@pytest.mark.skipif(
-    not _tws_available(), reason="no google.protobuf runtime discoverable"
-)
-def test_streaming_distinct_tws_ttl_native_timers(spark, sf_dir, replay_dir):
-    """The TTL arm runs on NATIVE event-time timers (registerTimer +
-    handleExpiredTimer) instead of GroupStateTimeout: every exact-distinct
-    key must still surface (re-emission after expiry allowed, loss never),
-    matching the applyInPandasWithState twin's bound."""
-    prev_provider = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None
-    )
-    schema = Stream.events(spark, sf_dir).df.schema
-    src = S.file_source(spark, replay_dir, schema, max_files_per_trigger=1)
-    out = S.distinct_streaming(
-        src, "user_id", "event_type", ttl="30m", engine="tws"
-    )
-    S.run_to_memory(out, "tws_dist_ttl")
-    got = [
-        (r.user_id, r.event_type)
-        for r in spark.sql("SELECT * FROM tws_dist_ttl").collect()
-    ]
-    exp = {
-        (r.user_id, r.event_type)
-        for r in (
-            Stream.events(spark, sf_dir)
-            .distinct("user_id", "event_type")
-            .df.collect()
-        )
-    }
-    assert set(got) == exp  # every distinct key surfaced, none lost
-    assert (
-        spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-        == prev_provider
-    ), "TWS op leaked the RocksDB provider into the session conf"
 
 
 def test_streaming_windowed_trend_aggregate_matches_batch(
@@ -2118,34 +1997,6 @@ def test_streaming_trailing_negation_confirms_in_event_time(
     assert got == batch
 
 
-@pytest.mark.skipif(
-    not _tws_available(), reason="no google.protobuf runtime discoverable"
-)
-def test_streaming_trailing_negation_tws_native_timers(spark, tmp_path):
-    """transformWithStateInPandas twin: trailing-negation confirmation on
-    NATIVE event-time timers (one registerTimer per pending deadline,
-    handleExpiredTimer flushes) — same result as batch and as the
-    applyInPandasWithState arm; session provider conf stays untouched."""
-    prev_provider = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None
-    )
-    d, schema, p, batch = _trailing_neg_scenario(spark, tmp_path)
-    src = S.file_source(spark, d, schema, max_files_per_trigger=1,
-                        order_col="event_id")
-    out = S.apply_pattern_streaming(
-        src.watermark("0 seconds").partition_by("user_id"), p, engine="tws"
-    )
-    S.run_to_memory(out, "neg_confirm_tws")
-    got = sorted(
-        (r.a_id, r.b_id) for r in spark.table("neg_confirm_tws").collect()
-    )
-    assert got == batch == [(5, 6)]
-    assert (
-        spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-        == prev_provider
-    )
-
-
 def test_streaming_trailing_negation_validation(spark, sf_dir, replay_dir):
     """Trailing negation in streaming REQUIRES within + watermark and is
     incompatible with the processing-time idle GC (one timeout slot)."""
@@ -2172,49 +2023,13 @@ def test_streaming_trailing_negation_validation(spark, sf_dir, replay_dir):
         )
 
 
-@pytest.mark.skipif(
-    not _tws_available(), reason="no google.protobuf runtime discoverable"
-)
-def test_tws_provider_survives_stamp_stripping_rewrap(spark, sf_dir, replay_dir):
-    """The RocksDB provider conf must reach .start() even when every stamp
-    is lost between the TWS op and the sink: a bare Stream(...) re-wrap
-    resets session_confs and a DataFrame transformation drops the
-    _varpulis_session_confs attribute (the exact path run_program takes
-    through the ts-normalization re-wrap, ADVICE r11 medium).
-    start_query detects transformWithStateInPandas in the analyzed plan and
-    applies _TWS_CONFS regardless — still query-scoped."""
-    prev_provider = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None
-    )
-    schema = Stream.events(spark, sf_dir).df.schema
-    src = S.file_source(spark, replay_dir, schema, max_files_per_trigger=1)
-    out = S.count_window_streaming(
-        src.partition_by("user_id"), 20,
-        {"n": ("count", None)}, engine="tws",
-    )
-    # strip every stamp: transformation drops the df attribute, bare
-    # Stream(...) resets session_confs
-    stripped = Stream(
-        out.df.select("user_id", "window_id", "n"), ts_col=out.ts_col
-    )
-    assert not stripped.session_confs
-    assert not getattr(stripped.df, "_varpulis_session_confs", None)
-    S.run_to_memory(stripped, "tws_stripped")
-    got = spark.sql("SELECT count(*) AS c FROM tws_stripped").collect()[0].c
-    assert got > 0
-    assert (
-        spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-        == prev_provider
-    ), "plan-detected TWS conf leaked into the session"
-
-
 def _ooo_late_completion_scenario(spark, tmp_path):
     """Non-trailing SEQ(signup, purchase) within 2h on input watermarked at
     6h: the completing purchase arrives one micro-batch LATE and
     out-of-order (event-time before the previous batch's max). The signup
     must survive eviction until the WATERMARK (not the batch max) passes
     its horizon — the batch-max floor would evict it in batch 2 and lose
-    the match (ADVICE r11: TWS arm fell back to wm=0 under timeMode None)."""
+    the match."""
     import pandas as _pd
 
     rows = [
@@ -2251,219 +2066,61 @@ def _ooo_late_completion_scenario(spark, tmp_path):
     return d, df.schema, p, batch_rows
 
 
-@pytest.mark.parametrize(
-    "engine",
-    [
-        "pandas",
-        pytest.param(
-            "tws",
-            marks=pytest.mark.skipif(
-                not _tws_available(),
-                reason="no google.protobuf runtime discoverable",
-            ),
-        ),
-    ],
-)
+# The streaming benchmark runs the pattern on RocksDB with changelog
+# checkpointing; the default gate keeps one parity case on that store.
+_STATE_STORES = {
+    "default": {},
+    "rocksdb": {
+        "spark.sql.streaming.stateStore.providerClass":
+            "org.apache.spark.sql.execution.streaming.state."
+            "RocksDBStateStoreProvider",
+        "spark.sql.streaming.stateStore.rocksdb."
+        "changelogCheckpointing.enabled": "true",
+    },
+}
+
+
+@pytest.mark.parametrize("store", sorted(_STATE_STORES))
 def test_streaming_watermarked_pattern_keeps_ooo_completion(
-    spark, tmp_path, engine
+    spark, tmp_path, store
 ):
-    """Both stateful engines must use the WATERMARK eviction floor on
-    watermarked input for non-trailing patterns (TWS previously ran
-    timeMode=None → wm 0 → batch-max floor, evicting early)."""
+    """The stateful pattern must use the WATERMARK eviction floor on
+    watermarked input for non-trailing patterns, and match batch on both
+    the default state store and RocksDB with changelog checkpointing."""
     d, schema, p, batch_rows = _ooo_late_completion_scenario(spark, tmp_path)
     assert batch_rows == [(1, 2)]  # scenario sanity
     src = S.file_source(spark, d, schema, max_files_per_trigger=1,
                         order_col="event_id")
     out = S.apply_pattern_streaming(
-        src.watermark("6 hours").partition_by("user_id"), p, engine=engine
+        src.watermark("6 hours").partition_by("user_id"), p
     )
-    S.run_to_memory(out, f"ooo_keep_{engine}")
+    confs = _STATE_STORES[store]
+    saved = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        q = S.run_to_memory(out, f"ooo_keep_{store}")
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
     got = sorted(
         (r.a_id, r.b_id)
-        for r in spark.table(f"ooo_keep_{engine}").collect()
+        for r in spark.table(f"ooo_keep_{store}").collect()
     )
     assert got == batch_rows
+    # the query really ran on the store it was given
+    metrics = q.recentProgress[-1]["stateOperators"][0]["customMetrics"]
+    assert any(k.startswith("rocksdb") for k in metrics) == (store == "rocksdb")
 
 
-@pytest.mark.skipif(
-    not _tws_available(), reason="no google.protobuf runtime discoverable"
-)
-def test_streaming_trend_tws_parity(spark, sf_dir, replay_dir):
-    """transformWithStateInPandas GRETA twin (VERDICT r11 task 4): the DP
-    tail in a native ListState + running totals in a ValueState must
-    reproduce the batch trend_aggregate exactly on both the
-    vectorized-predicate (within-bounded) and closed-form paths; the
-    session provider conf stays untouched."""
-    from varpulis_spark.operators.greta import trend_aggregate
-
-    prev_provider = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None
-    )
-    schema = Stream.events(spark, sf_dir).df.schema
-
-    def last_rows(table):
-        rows = spark.sql(f"SELECT * FROM {table}").collect()
-        best = {}
-        for r in rows:
-            if r.user_id not in best or r.n_events > best[r.user_id].n_events:
-                best[r.user_id] = r
-        return best
-
-    rising = lambda cols, i: cols["value"][:i] < cols["value"][i]  # noqa: E731
-    src = S.file_source(
-        spark, replay_dir, schema, max_files_per_trigger=1,
-        order_col="event_id",
-    )
-    out = S.trend_aggregate_streaming(
-        src.partition_by("user_id"), event_type="purchase",
-        value_field="value", within="6h", adjacent_vec=rising,
-        engine="tws",
-    )
-    S.run_to_memory(out, "ta_tws")
-    got = {
-        u: (round(r.trend_count, 6), round(r.event_count, 6),
-            round(r.value_sum, 6))
-        for u, r in last_rows("ta_tws").items()
-    }
-    exp = {
-        r.user_id: (round(r.trend_count, 6), round(r.event_count, 6),
-                    round(r.value_sum, 6))
-        for r in trend_aggregate(
-            Stream.events(spark, sf_dir).partition_by("user_id"),
-            event_type="purchase", value_field="value", within="6h",
-            adjacent_vec=rising,
-        ).collect()
-    }
-    assert got == exp and len(got) > 0
-
-    # closed form: ValueState-only path
-    src = S.file_source(
-        spark, replay_dir, schema, max_files_per_trigger=1,
-        order_col="event_id",
-    )
-    out = S.trend_aggregate_streaming(
-        src.partition_by("user_id"), event_type="purchase", engine="tws",
-    )
-    S.run_to_memory(out, "ta_tws_cf")
-    got = {
-        u: (round(r.trend_count, 6), round(r.event_count, 6))
-        for u, r in last_rows("ta_tws_cf").items()
-    }
-    exp = {
-        r.user_id: (round(r.trend_count, 6), round(r.event_count, 6))
-        for r in trend_aggregate(
-            Stream.events(spark, sf_dir).partition_by("user_id"),
-            event_type="purchase",
-        ).collect()
-    }
-    assert got == exp and len(got) > 0
-    assert (
-        spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-        == prev_provider
-    )
-
-
-@pytest.mark.skipif(
-    not _tws_available(), reason="no google.protobuf runtime discoverable"
-)
-def test_streaming_windowed_trend_tws_pane_timer(spark, sf_dir, replay_dir):
-    """Windowed GRETA on the TWS engine: pane teardown runs on a NATIVE
-    event-time timer (one registerTimer at window_end instead of the
-    re-clamped GroupStateTimeout) and the drained result still equals the
-    batch pane aggregates."""
-    from varpulis_spark.streaming import trend_aggregate_windowed_streaming
-
-    schema = Stream.events(spark, sf_dir).df.schema
-    rising = lambda cols, i: cols["value"][:i] < cols["value"][i]  # noqa: E731
-    src = S.file_source(
-        spark, replay_dir, schema, max_files_per_trigger=1,
-        order_col="event_id",
-    ).watermark("10 minutes")
-    out = trend_aggregate_windowed_streaming(
-        src.partition_by("user_id"), "6h", event_type="purchase",
-        value_field="value", within="2h", adjacent_vec=rising,
-        engine="tws",
-    )
-    S.run_to_memory(out, "taw_tws")
-    rows = spark.sql("SELECT * FROM taw_tws").collect()
-    best = {}
-    for r in rows:
-        k = (r.user_id, r.window_start)
-        if k not in best or r.n_events > best[k].n_events:
-            best[k] = r
-    got = {
-        k: (round(r.trend_count, 6), round(r.event_count, 6))
-        for k, r in best.items()
-    }
-    exp = {
-        (r.user_id, r.window_start): (
-            round(r.trend_count, 6), round(r.event_count, 6)
-        )
-        for r in (
-            Stream.events(spark, sf_dir)
-            .partition_by("user_id")
-            .window("6h")
-            .trend_aggregate(
-                event_type="purchase", value_field="value", within="2h",
-                adjacent_vec=rising,
-            )
-            .df.collect()
-        )
-    }
-    assert got == exp and len(got) > 0
-
-
-@pytest.mark.skipif(
-    not _tws_available(), reason="no google.protobuf runtime discoverable"
-)
-def test_streaming_limit_tws_parity(spark, sf_dir, replay_dir):
-    """TWS limit twin: per-key first-5 equals the pandas arm's contract
-    (5 rows per key, the earliest by (ts, event_id))."""
-    schema = Stream.events(spark, sf_dir).df.schema
-    src = S.file_source(spark, replay_dir, schema, max_files_per_trigger=1)
-    out = S.limit_streaming(src.partition_by("user_id"), 5, engine="tws")
-    S.run_to_memory(out, "lim_tws")
-    got = spark.sql(
-        "SELECT user_id, count(*) c FROM lim_tws GROUP BY 1"
-    ).collect()
-    assert all(r.c == 5 for r in got) and len(got) > 0
-
-
-def test_trend_auto_engine_defaults_to_pandas(monkeypatch):
-    """The r12 flip-then-revert adjudication (PERF_NOTES r12): trend's
-    auto engine resolves to the applyInPandasWithState arm unless
-    VARPULIS_TWS_TREND=1 opts in — pinned so a stray re-flip cannot land
-    without re-running the idle-host A/B."""
-    import varpulis_spark.streaming as S2
-
-    class _Probe:
-        df = None
-        keys = []
-        ts_col = "ts"
-
-    def _tws_sentinel(*a, **kw):
-        raise AssertionError("auto resolved to the tws arm")
-
-    monkeypatch.delenv("VARPULIS_TWS_TREND", raising=False)
-    monkeypatch.setattr(
-        S2, "_trend_aggregate_streaming_tws", _tws_sentinel
-    )
-    # keys=[] makes the pandas arm raise its partition_by ValueError;
-    # the sentinel would fire first if auto routed to tws
-    with pytest.raises(ValueError, match="partition_by"):
-        S2.trend_aggregate_streaming(_Probe(), engine="auto")
-    # and the opt-in env still routes to tws
-    monkeypatch.setenv("VARPULIS_TWS_TREND", "1")
-    with pytest.raises(AssertionError, match="tws arm"):
-        S2.trend_aggregate_streaming(_Probe(), engine="auto")
-
-
-def test_trend_unbounded_state_warning_both_engines(monkeypatch):
+def test_trend_unbounded_state_warning():
     """A predicate with no `within` means per-key state grows with full
-    key history — the heads-up must fire for BOTH engines (ADVICE r12:
-    the tws arm silently skipped it). The warning is hoisted before
-    engine dispatch, so it fires even though each arm then raises on the
-    probe's empty keys / missing df."""
+    key history — the heads-up must fire. It is raised before the
+    operator builds its plan, so it fires even though the probe's empty
+    keys then make the call raise."""
     import warnings as W
 
     import varpulis_spark.streaming as S2
@@ -2473,13 +2130,27 @@ def test_trend_unbounded_state_warning_both_engines(monkeypatch):
         keys = []
         ts_col = "ts"
 
-    for engine in ("pandas", "tws"):
-        with W.catch_warnings(record=True) as got:
-            W.simplefilter("always")
-            with pytest.raises(Exception):
-                S2.trend_aggregate_streaming(
-                    _Probe(), adjacent=lambda a, b: True, engine=engine
-                )
-        assert any(
-            "per-key state grows" in str(w.message) for w in got
-        ), f"missing unbounded-state warning on the {engine} arm"
+    with W.catch_warnings(record=True) as got:
+        W.simplefilter("always")
+        with pytest.raises(ValueError, match="partition_by"):
+            S2.trend_aggregate_streaming(_Probe(), adjacent=lambda a, b: True)
+    assert any("per-key state grows" in str(w.message) for w in got)
+
+
+def test_get_spark_leaves_the_process_alone(spark):
+    """get_spark configures the session and nothing else: no protobuf
+    version-check waiver in the environment, no package directory from
+    the varpulis_spark cache on sys.path or PYTHONPATH, and no py-files
+    shipped to executors from it."""
+    from varpulis_spark.engine import get_spark
+
+    assert get_spark("varpulis_spark_tests", cores=4) is spark
+    cache = os.path.join(
+        os.environ.get("XDG_CACHE_HOME", os.path.expanduser("~/.cache")),
+        "varpulis_spark",
+    )
+    assert "TEMPORARILY_DISABLE_PROTOBUF_VERSION_CHECK" not in os.environ
+    paths = sys.path + os.environ.get("PYTHONPATH", "").split(os.pathsep)
+    assert not [p for p in paths if p.startswith(cache)]
+    py_files = spark.sparkContext.getConf().get("spark.submit.pyFiles", "")
+    assert cache not in (py_files or "")

@@ -156,13 +156,11 @@ class _IncrementalRunner:
                     }
                 )
 
-        from varpulis_spark.streaming import start_query
-
-        return start_query(
+        return (
             rdf.writeStream.outputMode("append")
             .option("checkpointLocation", ckpt)
-            .foreachBatch(sink),
-            df=rdf,
+            .foreachBatch(sink)
+            .start()
         )
 
     def _compile_streaming(self, source_text: str, emit_streams: set[str]):

@@ -140,22 +140,8 @@ def spread_keys(df: DataFrame, keys: list[str]) -> DataFrame:
 
 def get_spark(app_name: str = "varpulis_spark", cores: int | None = None) -> SparkSession:
     """Create (or return) a SparkSession with scale-aware defaults."""
-    # Vendor a protobuf runtime (if one is discoverable) BEFORE the JVM
-    # launches so Python workers inherit PYTHONPATH — unlocks
-    # transformWithStateInPandas. It cannot be deferred to the first TWS
-    # call: the JVM snapshots its environment at launch, so a PYTHONPATH
-    # set afterwards never reaches Python workers. No-op when a real
-    # protobuf is already importable (the shim never shadows an install)
-    # or no bundled runtime exists; processes embedding other
-    # google.protobuf consumers that must not see the version-check
-    # waiver can opt out with VARPULIS_TWS_VENDOR=off (TWS ops then
-    # raise unless a real protobuf is installed). See pbvendor docstring.
-    if os.environ.get("VARPULIS_TWS_VENDOR", "auto") != "off":
-        from varpulis_spark import pbvendor
-
-        pbvendor.ensure_protobuf()
     cores = cores or default_parallelism()
-    builder = (
+    return (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cores}]")
         .config("spark.sql.adaptive.enabled", "true")
@@ -171,7 +157,6 @@ def get_spark(app_name: str = "varpulis_spark", cores: int | None = None) -> Spa
         .config("spark.sql.ansi.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
-        .config("spark.sql.session.timeZone", "UTC")
         # the UI is off by default (tests/bench spin many sessions; port
         # churn) — VARPULIS_SPARK_UI=1 enables it so profiling scripts can
         # read per-stage shuffle/spill metrics from the REST API
@@ -179,16 +164,8 @@ def get_spark(app_name: str = "varpulis_spark", cores: int | None = None) -> Spa
             "spark.ui.enabled",
             "true" if os.environ.get("VARPULIS_SPARK_UI") == "1" else "false",
         )
+        .getOrCreate()
     )
-    # On a real cluster executors don't inherit the driver's environment;
-    # ship the vendored runtime as a py-files zip + the version waiver
-    # (no-op locally, and empty when the shim is inactive or opted out).
-    if os.environ.get("VARPULIS_TWS_VENDOR", "auto") != "off":
-        from varpulis_spark import pbvendor
-
-        for k, v in pbvendor.executor_env().items():
-            builder = builder.config(k, v)
-    return builder.getOrCreate()
 
 
 # (session id, path, file stamp) → DataFrame plan handle. Plan METADATA

@@ -67,12 +67,6 @@ class Stream:
         # equal-timestamp ties in order-dependent ops (ema/first/last/SASE)
         self.order_col = order_col
         self.name = name
-        # SQL confs the query needs at .start() time (e.g. the RocksDB
-        # state-store provider for transformWithStateInPandas ops). Applied
-        # query-scoped by the streaming sink helpers: Spark clones the
-        # session conf synchronously inside .start(), so set→start→restore
-        # never leaks into other queries in the session (ADVICE r10).
-        self.session_confs: dict[str, str] = {}
 
     # -- construction -------------------------------------------------------
 
@@ -105,7 +99,6 @@ class Stream:
         kw.update(overrides)
         s = Stream(df, **kw)
         s._watermarked = wm
-        s.session_confs = dict(self.session_confs)
         return s
 
     # -- stateless ops -------------------------------------------------------
@@ -403,18 +396,16 @@ class Stream:
 
     # -- patterns (SASE+) -----------------------------------------------------
 
-    def pattern(self, pattern, engine: str = "auto") -> "Stream":
+    def pattern(self, pattern) -> "Stream":
         """Run a SASE+ pattern (operators/sase.py) over this stream.
 
         On a streaming input this dispatches to the incremental NFA
         (streaming.apply_pattern_streaming) — the same program text runs
-        in both modes, like trend_aggregate. `engine` selects the stateful
-        backend there ("pandas" default / "tws" native-timer twin /
-        "auto" = VARPULIS_TWS_PATTERN=1 opt-in); ignored in batch."""
+        in both modes, like trend_aggregate."""
         if self.df.isStreaming:
             from varpulis_spark.streaming import apply_pattern_streaming
 
-            return apply_pattern_streaming(self, pattern, engine=engine)
+            return apply_pattern_streaming(self, pattern)
         from varpulis_spark.operators.sase import apply_pattern_batch
 
         out = apply_pattern_batch(self, pattern)

@@ -39,8 +39,6 @@ guard pinning the bounded-state plan shape.
 
 from __future__ import annotations
 
-import os
-import threading
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -48,38 +46,6 @@ from pyspark.sql import functions as F
 
 from varpulis_spark.functions import duration_interval_str
 from varpulis_spark.stream import Stream
-
-# Per-query SQL confs the transformWithStateInPandas operators need at
-# .start() time (multi-column-family state ⇒ RocksDB provider). Attached to
-# the op's Stream/DataFrame and applied query-scoped by start_query() —
-# never set on the session, so co-resident queries and HDFS-checkpoint
-# restarts keep their own provider (ADVICE r10).
-_TWS_CONFS = {
-    "spark.sql.streaming.stateStore.providerClass":
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-}
-
-# start_query's set→start→restore on the shared session conf is a critical
-# section: PipelineServer starts/hot-reloads queries from HTTP handler
-# threads, and two interleaved starts could capture each other's provider
-# conf (ADVICE r11). One lock per process is enough — a SparkSession is
-# process-wide here and the window is a few ms around .start().
-_START_LOCK = threading.Lock()
-
-
-def _plan_uses_tws(df) -> bool:
-    """True when the analyzed plan contains a transformWithStateInPandas
-    node. Safety net for _TWS_CONFS propagation: the conf rides on
-    Stream.session_confs / df._varpulis_session_confs, but any DataFrame
-    transformation or bare Stream(...) re-wrap between the op and the sink
-    drops the stamp (ADVICE r11 medium) — the plan itself cannot lie."""
-    try:
-        return "transformwithstate" in (
-            df._jdf.queryExecution().analyzed().toString().lower()
-        )
-    except Exception:  # noqa: BLE001 — plan introspection is best-effort
-        return False
-
 
 # ---------------------------------------------------------------------------
 # sources
@@ -177,44 +143,10 @@ def kafka_source(
 
 
 def start_query(writer, stream: Stream | None = None, df=None):
-    """Start a streaming query with any per-query SQL confs the pipeline
-    requires (Stream.session_confs / df._varpulis_session_confs — e.g. the
-    RocksDB state-store provider for transformWithStateInPandas ops).
-
-    Spark reads the provider conf from a clone of the session conf taken
-    SYNCHRONOUSLY inside .start(), so set→start→restore scopes the conf to
-    this one query: concurrent queries and later restarts from HDFS-backed
-    checkpoints in the same session are untouched (ADVICE r10, verified
-    empirically — a writeStream .option() is NOT honored for this conf)."""
-    confs: dict[str, str] = {}
-    if stream is not None:
-        # duck-typed streams (tests wrap bare DataFrames) may lack the attr
-        confs.update(getattr(stream, "session_confs", None) or {})
-        df = df if df is not None else stream.df
-    if df is not None:
-        confs.update(getattr(df, "_varpulis_session_confs", None) or {})
-        if (
-            "spark.sql.streaming.stateStore.providerClass" not in confs
-            and _plan_uses_tws(df)
-        ):
-            # the stamp was lost somewhere between the TWS op and here
-            # (re-wrap / transformation) — the plan is the ground truth
-            confs.update(_TWS_CONFS)
-    if not confs:
-        return writer.start()
-    spark = df.sparkSession
-    with _START_LOCK:
-        saved = {k: spark.conf.get(k, None) for k in confs}
-        for k, v in confs.items():
-            spark.conf.set(k, v)
-        try:
-            return writer.start()
-        finally:
-            for k, prev in saved.items():
-                if prev is None:
-                    spark.conf.unset(k)
-                else:
-                    spark.conf.set(k, prev)
+    """Start a streaming query from its `DataStreamWriter`. `stream`/`df`
+    are accepted for callers that name the pipeline being started; the
+    start itself needs nothing from them."""
+    return writer.start()
 
 
 def to_memory(stream: Stream, name: str, output_mode: str = "append", trigger_once: bool = True):
@@ -222,7 +154,7 @@ def to_memory(stream: Stream, name: str, output_mode: str = "append", trigger_on
     w = stream.df.writeStream.format("memory").queryName(name).outputMode(output_mode)
     if trigger_once:
         w = w.trigger(availableNow=True)
-    return start_query(w, stream)
+    return w.start()
 
 
 def run_to_memory(stream: Stream, name: str, output_mode: str = "append"):
@@ -230,11 +162,11 @@ def run_to_memory(stream: Stream, name: str, output_mode: str = "append"):
     limits (maxFilesPerTrigger → one micro-batch per file, deterministic
     replay), then stop. `availableNow` may coalesce files into one batch;
     this helper is the timed-replay harness (.evt analog)."""
-    q = start_query(
+    q = (
         stream.df.writeStream.format("memory")
         .queryName(name)
-        .outputMode(output_mode),
-        stream,
+        .outputMode(output_mode)
+        .start()
     )
     q.processAllAvailable()
     q.stop()
@@ -243,18 +175,16 @@ def run_to_memory(stream: Stream, name: str, output_mode: str = "append"):
 
 
 def to_console(stream: Stream, output_mode: str = "append"):
-    return start_query(
-        stream.df.writeStream.format("console").outputMode(output_mode), stream
-    )
+    return stream.df.writeStream.format("console").outputMode(output_mode).start()
 
 
 def to_parquet(stream: Stream, path: str, checkpoint: str, output_mode: str = "append"):
-    return start_query(
+    return (
         stream.df.writeStream.format("parquet")
         .option("path", path)
         .option("checkpointLocation", checkpoint)
-        .outputMode(output_mode),
-        stream,
+        .outputMode(output_mode)
+        .start()
     )
 
 
@@ -264,7 +194,7 @@ def foreach_batch(stream: Stream, fn: Callable[[DataFrame, int], None], checkpoi
     w = stream.df.writeStream.foreachBatch(fn)
     if checkpoint:
         w = w.option("checkpointLocation", checkpoint)
-    return start_query(w, stream)
+    return w.start()
 
 
 class LateRouter:
@@ -513,7 +443,7 @@ _COUNT_AGG_FNS = {
 
 def count_window_streaming(
     stream: Stream, size: int, aggs: dict[str, tuple[str, str | None]],
-    slide: int | None = None, engine: str = "auto",
+    slide: int | None = None,
 ) -> Stream:
     """Streaming count window: emit one aggregate row per completed window
     per key, in arrival order (CountWindow window.rs:274-444 — the trailing
@@ -527,24 +457,8 @@ def count_window_streaming(
     State per key = (next window id, absolute position of the buffer head,
     leftover rows) — the buffer never holds more than `size + slide` rows:
     rows before the next window's start are dropped as windows complete.
-
-    `engine` selects the stateful backend: "pandas" = applyInPandasWithState
-    (default, works on every state store); "tws" = transformWithStateInPandas
-    (arbitrary-state v2 — native per-variable column families, requires the
-    RocksDB provider and a protobuf runtime, see pbvendor); "auto" = tws only
-    when VARPULIS_TWS_COUNT_WINDOW=1 and the runtime is available.
     """
-    import os as _os
     import pickle
-
-    if engine == "auto":
-        engine = (
-            "tws"
-            if _os.environ.get("VARPULIS_TWS_COUNT_WINDOW") == "1"
-            else "pandas"
-        )
-    if engine == "tws":
-        return _count_window_streaming_tws(stream, size, aggs, slide)
 
     import pandas as pd
 
@@ -601,135 +515,6 @@ def count_window_streaming(
         run, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
     )
     return Stream(out, ts_col=stream.ts_col, keys=keys)
-
-
-def _count_window_streaming_tws(
-    stream: Stream, size: int, aggs: dict[str, tuple[str, str | None]],
-    slide: int | None = None,
-) -> Stream:
-    """transformWithStateInPandas twin of count_window_streaming (same
-    CountWindow semantics, window.rs:274-444).
-
-    Arbitrary-state v2 upgrades over the applyInPandasWithState path:
-    the leftover row buffer lives in a native ListState column family
-    (row-typed, RocksDB-resident — no whole-buffer pickle through every
-    micro-batch) and the (next-window, base-position) cursor in its own
-    ValueState. Count windows are count-triggered, so no timers are
-    needed; timer-driven ops (panes, negation confirmation) are the next
-    migration candidates now that the API runs (see SCALE.md).
-
-    Requires the RocksDB state-store provider (multiple column families)
-    — attached as a query-scoped conf applied at .start() by
-    streaming.start_query, never set on the session — and a protobuf
-    runtime (pbvendor).
-    """
-    import pandas as pd
-
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    from varpulis_spark import pbvendor
-
-    if not pbvendor.tws_available():
-        raise RuntimeError(
-            "transformWithStateInPandas needs a google.protobuf runtime; "
-            "none importable and no bundled runtime found (see pbvendor)"
-        )
-
-    slide = slide or size
-    df = stream.df
-    keys = stream.keys
-    if not keys:
-        raise ValueError("streaming count windows require partition_by")
-    sort_cols = [stream.ts_col] + ([stream.order_col] if stream.order_col else [])
-    key_fields = ", ".join(f"{k} {t}" for k, t in df.dtypes if k in keys)
-    out_fields = []
-    for alias, (fn, _field) in aggs.items():
-        out_fields.append(f"{alias} double" if fn != "count" else f"{alias} long")
-    out_schema = f"{key_fields}, window_id long, " + ", ".join(out_fields)
-    buf_schema = ", ".join(f"{c} {t}" for c, t in df.dtypes)
-    buf_cols = [c for c, _ in df.dtypes]
-    # ListState round-trips rows as tuples; pd.DataFrame(tuples) comes back
-    # all-object (timestamps as scalar objects), so aggregates over leftover
-    # rows would run on object-dtype series. Restore the Arrow-path dtypes
-    # after reconstruction (ADVICE r10).
-    _pd_dtypes = {
-        "tinyint": "int8", "smallint": "int16", "int": "int32",
-        "bigint": "int64", "float": "float32", "double": "float64",
-        "boolean": "bool", "timestamp": "datetime64[us]",
-        "timestamp_ntz": "datetime64[us]",
-    }
-    buf_dtypes = {c: _pd_dtypes[t] for c, t in df.dtypes if t in _pd_dtypes}
-
-    def _typed(leftover: list) -> "pd.DataFrame":
-        pdf = pd.DataFrame(leftover, columns=buf_cols)
-        for c, dt in buf_dtypes.items():
-            try:
-                pdf[c] = pdf[c].astype(dt)
-            except (TypeError, ValueError):
-                pass  # nullable ints etc. — keep object rather than crash
-        return pdf
-    n_keys = len(keys)
-    aggs_items = list(aggs.items())
-    out_cols = list(keys) + ["window_id"] + [a for a, _ in aggs_items]
-
-    class _CountWindowProcessor(StatefulProcessor):
-        def init(self, handle):
-            self.meta = handle.getValueState("meta", "win long, base long")
-            self.buf = handle.getListState("buf", buf_schema)
-
-        def handleInputRows(self, key, rows, timer_values):
-            seen = self.meta.exists()
-            win, base = self.meta.get() if seen else (0, 0)
-            leftover = list(self.buf.get()) if seen else []
-            chunks = [pdf for pdf in rows if len(pdf)]
-            new = (
-                pd.concat(chunks).sort_values(sort_cols, kind="mergesort")
-                if chunks
-                else None
-            )
-            batches = []
-            if leftover:
-                batches.append(_typed(leftover))
-            if new is not None and not new.empty:
-                batches.append(new)
-            all_rows = pd.concat(batches) if batches else pd.DataFrame()
-            out = []
-            while base + len(all_rows) >= win * slide + size:
-                start = win * slide - base
-                chunk = all_rows.iloc[start : start + size]
-                row = list(key[:n_keys]) + [win]
-                for alias, (fn, field) in aggs_items:
-                    series = chunk[field] if field else chunk.iloc[:, 0]
-                    row.append(_COUNT_AGG_FNS[fn](series))
-                out.append(row)
-                win += 1
-                drop = win * slide - base
-                if drop > 0:
-                    all_rows = all_rows.iloc[drop:]
-                    base += drop
-            self.meta.update((win, base))
-            self.buf.clear()
-            if len(all_rows):
-                self.buf.appendList(
-                    list(all_rows[buf_cols].itertuples(index=False, name=None))
-                )
-            yield pd.DataFrame(out, columns=out_cols)
-
-        def close(self):
-            pass
-
-    out = df.groupBy(*[F.col(k) for k in keys]).transformWithStateInPandas(
-        statefulProcessor=_CountWindowProcessor(),
-        outputStructType=out_schema,
-        outputMode="Append",
-        timeMode="None",
-    )
-    # TWS needs multi-column-family state: require RocksDB at START time,
-    # query-scoped (never mutate the session conf — ADVICE r10).
-    out._varpulis_session_confs = dict(_TWS_CONFS)
-    s = Stream(out, ts_col=stream.ts_col, keys=keys)
-    s.session_confs.update(_TWS_CONFS)
-    return s
 
 
 def forecast_streaming(
@@ -852,7 +637,6 @@ def trend_aggregate_streaming(
     within=None,
     adjacent_vec=None,
     timeout_on_window_end: bool = False,
-    engine: str = "auto",
 ) -> Stream:
     """Streaming `.trend_aggregate` — GRETA in the push loop (the
     reference runs trend aggregation per arriving event,
@@ -882,34 +666,7 @@ def trend_aggregate_streaming(
     `window_end` is one of the grouping keys): arm an event-time timeout
     at each pane's `window_end` so (key, pane) state is REMOVED once the
     watermark passes the pane — total state is bounded by the number of
-    OPEN panes, not pane history. Requires a watermarked input.
-
-    `engine`: "pandas" = applyInPandasWithState (default); "tws" =
-    transformWithStateInPandas (DP tail in an APPEND-ONLY native
-    ListState, pane teardown on a native event-time timer); "auto" = tws
-    only when VARPULIS_TWS_TREND=1 and the runtime is available.
-
-    The default was briefly flipped to tws mid-r12 on a large-buffer A/B
-    (tws p50 1531 vs pandas 2868 ms) — then REVERTED the same round: on
-    an idle host the pandas arm wins the same ~5k-rows/key scenario
-    consistently (p50 971-1082 vs 1361-1556 ms, eps 3786-3861 vs
-    3087-3465 across 3 runs; the flip-justifying leg was a loaded-host
-    artifact) and the small per-(key, pane) regime is a tie. The
-    structural reason: ListState GETS still round-trip the whole tail
-    through Arrow every batch — append-only only saves the write half,
-    while the pickle arm's read+write are both O(tail) but with a lower
-    constant. bench tws_ab's trend_bigbuf scenario keeps both arms
-    measured every round."""
-    import os as _os
-
-    if engine == "auto":
-        engine = (
-            "tws" if _os.environ.get("VARPULIS_TWS_TREND") == "1"
-            else "pandas"
-        )
-    # unbounded-state heads-up BEFORE engine dispatch so both arms emit it
-    # (ADVICE r12: the tws arm silently grew its ListState tail with full
-    # key history when a predicate had no `within`)
+    OPEN panes, not pane history. Requires a watermarked input."""
     if within is None and (adjacent is not None or adjacent_vec is not None):
         import warnings
 
@@ -917,11 +674,6 @@ def trend_aggregate_streaming(
             "streaming trend_aggregate with a predicate but no `within`: "
             "per-key state grows with the full key history — set `within` "
             "to bound the adjacency horizon."
-        )
-    if engine == "tws":
-        return _trend_aggregate_streaming_tws(
-            stream, event_type, adjacent, value_field, within,
-            adjacent_vec, timeout_on_window_end,
         )
     import pickle
 
@@ -1059,250 +811,6 @@ def trend_aggregate_streaming(
     return Stream(out, ts_col=ts_col, keys=keys)
 
 
-def _trend_aggregate_streaming_tws(
-    stream: Stream,
-    event_type: str | None = None,
-    adjacent=None,
-    value_field: str | None = None,
-    within=None,
-    adjacent_vec=None,
-    timeout_on_window_end: bool = False,
-) -> Stream:
-    """transformWithStateInPandas twin of trend_aggregate_streaming
-    (incremental GRETA, engine/pattern_analyzer.rs:1-80) — VERDICT r11
-    task 4, the third timer-driven TWS migration after distinct-TTL and
-    pattern confirmation.
-
-    Arbitrary-state v2 layout: the within-horizon DP tail (event rows +
-    their propagated cnt/len/val DP values) lives in a native ListState
-    column family — the applyInPandasWithState arm pickles the WHOLE tail
-    through every micro-batch, which is exactly the large-buffer regime
-    (1k-10k rows/key under long horizons) where row-wise state should
-    win; running totals sit in a small ValueState. Pane teardown
-    (`timeout_on_window_end`) is a native event-time timer registered at
-    the pane's window_end: handleExpiredTimer clears the (key, pane)
-    state — replacing the hand-rolled GroupStateTimeout re-arm dance
-    (setTimeoutTimestamp must be re-clamped above the watermark every
-    batch; registerTimer is set once)."""
-    import numpy as np
-    import pandas as pd
-
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    from varpulis_spark import pbvendor
-    from varpulis_spark.functions import duration_ns
-    from varpulis_spark.operators.greta import _greta_dp_extend
-
-    if not pbvendor.tws_available():
-        raise RuntimeError(
-            "transformWithStateInPandas needs a google.protobuf runtime; "
-            "none importable and no bundled runtime found (see pbvendor)"
-        )
-    df = stream.df
-    keys = stream.keys
-    if not keys:
-        raise ValueError("streaming trend_aggregate requires partition_by")
-    we_idx = keys.index("window_end") if timeout_on_window_end else None
-    if event_type is not None:
-        df = df.filter(F.col("event_type") == event_type)
-    within_ns = duration_ns(within) if within is not None else None
-    ts_col = stream.ts_col
-    sort_cols = [ts_col] + ([stream.order_col] if stream.order_col else [])
-    closed_form = (
-        adjacent is None and adjacent_vec is None and within_ns is None
-    )
-    has_value = value_field is not None
-
-    key_fields = ", ".join(f"{k} {t}" for k, t in df.dtypes if k in keys)
-    out_schema = (
-        f"{key_fields}, n_events long, trend_count double, event_count double"
-    )
-    if has_value:
-        out_schema += ", value_sum double"
-    out_cols = list(keys) + ["n_events", "trend_count", "event_count"] + (
-        ["value_sum"] if has_value else []
-    )
-    buf_cols = [c for c, _ in df.dtypes]
-    tail_schema = ", ".join(f"{c} {t}" for c, t in df.dtypes)
-    tail_schema += ", __cnt double, __len double"
-    if has_value:
-        tail_schema += ", __val double"
-    _pd_dtypes = {
-        "tinyint": "int8", "smallint": "int16", "int": "int32",
-        "bigint": "int64", "float": "float32", "double": "float64",
-        "boolean": "bool", "timestamp": "datetime64[us]",
-        "timestamp_ntz": "datetime64[us]",
-    }
-    tail_cols = buf_cols + ["__cnt", "__len"] + (["__val"] if has_value else [])
-    tail_dtypes = {c: _pd_dtypes[t] for c, t in df.dtypes if t in _pd_dtypes}
-    n_keys = len(keys)
-
-    class _TrendProcessor(StatefulProcessor):
-        def init(self, handle):
-            self.handle = handle
-            if closed_form:
-                self.meta = handle.getValueState("meta", "n long, vs double")
-            else:
-                self.meta = handle.getValueState(
-                    "meta",
-                    "tc double, ec double, vs double, n long, max_ts long",
-                )
-                self.tail = handle.getListState("tail", tail_schema)
-            if timeout_on_window_end:
-                self.armed = handle.getValueState("armed", "t long")
-
-        def _arm(self, key, timer_values):
-            if not timeout_on_window_end or self.armed.exists():
-                return
-            end_ms = int(pd.Timestamp(key[we_idx]).value // 1_000_000)
-            try:
-                wm_ms = timer_values.getCurrentWatermarkInMs()
-            except Exception:  # noqa: BLE001
-                wm_ms = 0
-            t_ms = max(end_ms, wm_ms + 1)
-            self.handle.registerTimer(t_ms)
-            self.armed.update((t_ms,))
-
-        def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-            # the watermark passed this pane's window_end: tear down
-            self.meta.clear()
-            if not closed_form:
-                self.tail.clear()
-            self.armed.clear()
-            yield pd.DataFrame(columns=out_cols)
-
-        def handleInputRows(self, key, rows, timer_values):
-            self._arm(key, timer_values)
-            chunks = [p for p in rows if len(p)]
-            if closed_form:
-                n0, sv0 = self.meta.get() if self.meta.exists() else (0, 0.0)
-                if not chunks:
-                    return
-                pdf = pd.concat(chunks)
-                n = n0 + len(pdf)
-                sv = sv0 + (
-                    float(pdf[value_field].sum()) if has_value else 0.0
-                )
-                self.meta.update((n, sv))
-                p = float(2.0 ** (n - 1))
-                row = list(key[:n_keys]) + [n, 2.0 * p - 1.0, n * p]
-                if has_value:
-                    row.append(sv * p)
-                yield pd.DataFrame([row], columns=out_cols)
-                return
-
-            seen = self.meta.exists()
-            tc, ec, vs, n_tot, max_ts = (
-                self.meta.get() if seen else (0.0, 0.0, 0.0, 0, -1)
-            )
-            if not chunks:
-                return
-            pdf = pd.concat(chunks).sort_values(sort_cols, kind="mergesort")
-            ts_new = pdf[ts_col].astype("int64")
-            if seen and max_ts >= 0:
-                live = ts_new >= max_ts  # drop cross-batch late arrivals
-                pdf = pdf[live]
-            if not len(pdf):
-                return
-            tail_rows = list(self.tail.get()) if seen else []
-            if tail_rows:
-                tpdf = pd.DataFrame(tail_rows, columns=tail_cols)
-                for c, dt in tail_dtypes.items():
-                    try:
-                        tpdf[c] = tpdf[c].astype(dt)
-                    except (TypeError, ValueError):
-                        pass
-                cnt0 = tpdf["__cnt"].to_numpy(dtype=np.float64)
-                len0 = tpdf["__len"].to_numpy(dtype=np.float64)
-                val0 = (
-                    tpdf["__val"].to_numpy(dtype=np.float64).reshape(-1, 1)
-                    if has_value else None
-                )
-                tail_events = tpdf[buf_cols]
-            else:
-                cnt0 = np.zeros(0)
-                len0 = np.zeros(0)
-                val0 = np.zeros((0, 1)) if has_value else None
-                tail_events = None
-            start = len(cnt0)
-            full = (
-                pdf if tail_events is None
-                else pd.concat([tail_events, pdf])
-            )
-            ts = full[ts_col].astype("int64").to_numpy()
-            vals = (
-                full[value_field].to_numpy(dtype=np.float64).reshape(-1, 1)
-                if has_value else None
-            )
-            cols = {c: full[c].to_numpy() for c in full.columns}
-            n = len(full)
-            cnt = np.concatenate([cnt0, np.zeros(n - start)])
-            len_sum = np.concatenate([len0, np.zeros(n - start)])
-            val_sum = (
-                np.concatenate([val0, np.zeros((n - start, 1))])
-                if has_value else None
-            )
-            _greta_dp_extend(
-                ts, vals, cols, adjacent, adjacent_vec, within_ns,
-                cnt, len_sum, val_sum, start=start,
-            )
-            tc += float(cnt[start:].sum())
-            ec += float(len_sum[start:].sum())
-            if has_value:
-                vs += float(val_sum[start:].sum())
-            n_tot += n - start
-            max_ts = int(ts[-1])
-            keep = (
-                ts >= max_ts - within_ns
-                if within_ns is not None
-                else np.ones(n, dtype=bool)
-            )
-            self.meta.update((tc, ec, vs, n_tot, max_ts))
-            # append-only in the common case — THE ListState advantage
-            # over whole-buffer pickle: while the horizon evicts nothing
-            # from the stored tail (long `within`, growing buffer), only
-            # the NEW rows are appended; the stored prefix is untouched.
-            # A clear+rewrite happens only when eviction actually drops
-            # stored rows.
-            old_intact = bool(keep[:start].all()) if start else True
-            if old_intact:
-                new_keep = keep[start:]
-                kept = full.iloc[start:][new_keep].copy()
-                kept["__cnt"] = cnt[start:][new_keep]
-                kept["__len"] = len_sum[start:][new_keep]
-                if has_value:
-                    kept["__val"] = val_sum[start:][new_keep].reshape(-1)
-            else:
-                kept = full[keep].copy()
-                kept["__cnt"] = cnt[keep]
-                kept["__len"] = len_sum[keep]
-                if has_value:
-                    kept["__val"] = val_sum[keep].reshape(-1)
-                self.tail.clear()
-            if len(kept):
-                self.tail.appendList(
-                    list(kept[tail_cols].itertuples(index=False, name=None))
-                )
-            row = list(key[:n_keys]) + [n_tot, tc, ec]
-            if has_value:
-                row.append(vs)
-            yield pd.DataFrame([row], columns=out_cols)
-
-        def close(self):
-            pass
-
-    out = df.groupBy(*[F.col(k) for k in keys]).transformWithStateInPandas(
-        statefulProcessor=_TrendProcessor(),
-        outputStructType=out_schema,
-        outputMode="Append",
-        timeMode="EventTime" if timeout_on_window_end else "None",
-    )
-    out._varpulis_session_confs = dict(_TWS_CONFS)
-    s = Stream(out, ts_col=ts_col, keys=keys)
-    s.session_confs.update(_TWS_CONFS)
-    return s
-
-
 def trend_aggregate_windowed_streaming(
     stream: Stream,
     size,
@@ -1313,7 +821,6 @@ def trend_aggregate_windowed_streaming(
     value_field: str | None = None,
     within=None,
     adjacent_vec=None,
-    engine: str = "auto",
 ) -> Stream:
     """Streaming windowed `.trend_aggregate` — pane composition (GRETA
     VLDB'17 §5; the reference runs trend aggregation continuously under
@@ -1352,13 +859,12 @@ def trend_aggregate_windowed_streaming(
         sub, event_type, adjacent, value_field, within,
         adjacent_vec=adjacent_vec,
         timeout_on_window_end=stream._watermarked,
-        engine=engine,
     )
 
 
 def distinct_streaming(
     stream: Stream, *cols: str, ttl: str | None = None,
-    watermark_delay: str = "0 seconds", engine: str = "auto",
+    watermark_delay: str = "0 seconds",
 ) -> Stream:
     """Streaming `.distinct(cols...)` with BOUNDED state (DistinctState +
     DISTINCT_LRU_CAPACITY, engine/types.rs:286-295): emit the first event
@@ -1374,28 +880,10 @@ def distinct_streaming(
     replay (processing-time timers would also schedule no-data
     micro-batches forever under the default trigger, hanging
     processAllAvailable). With `ttl` a watermark on the stream's ts column
-    is required; one is applied with `watermark_delay` if absent.
-
-    `engine` selects the stateful backend like count_window_streaming:
-    "pandas" (default) = applyInPandasWithState with EventTimeTimeout;
-    "tws" = transformWithStateInPandas with NATIVE event-time timers
-    (`registerTimer`/`handleExpiredTimer` replace the hand-rolled
-    timeout arm; requires RocksDB + a protobuf runtime, see pbvendor);
-    "auto" = tws only when VARPULIS_TWS_DISTINCT=1 and available."""
-    import os as _os
-
+    is required; one is applied with `watermark_delay` if absent."""
     import pandas as pd
 
     from pyspark.sql.streaming.state import GroupStateTimeout
-
-    if engine == "auto":
-        engine = (
-            "tws" if _os.environ.get("VARPULIS_TWS_DISTINCT") == "1" else "pandas"
-        )
-    if engine == "tws":
-        return _distinct_streaming_tws(
-            stream, *cols, ttl=ttl, watermark_delay=watermark_delay
-        )
 
     from varpulis_spark.functions import duration_ns
 
@@ -1448,137 +936,17 @@ def distinct_streaming(
     return Stream(out, ts_col=stream.ts_col, keys=stream.keys)
 
 
-def _distinct_streaming_tws(
-    stream: Stream, *cols: str, ttl: str | None = None,
-    watermark_delay: str = "0 seconds",
-) -> Stream:
-    """transformWithStateInPandas twin of distinct_streaming, using the
-    arbitrary-state-v2 NATIVE TIMER API for the event-time TTL: the
-    hand-rolled `GroupStateTimeout.EventTimeTimeout` + `hasTimedOut` arm
-    becomes `handle.registerTimer(last_ts + ttl)` on refresh (old timer
-    deleted) and `handleExpiredTimer` clearing the key's memory when the
-    watermark passes expiry — the engine tracks and fires timers in its
-    own column family, no sentinel rows or timeout flags in user state.
-    Same semantics: emit the event-time-first row per distinct key; after
-    `ttl` of event-time inactivity the key may re-emit.
-
-    Requires the RocksDB state-store provider and a protobuf runtime
-    (pbvendor); the applyInPandasWithState twin remains the default."""
-    import pandas as pd
-
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    from varpulis_spark import pbvendor
-    from varpulis_spark.functions import duration_ns
-
-    if not pbvendor.tws_available():
-        raise RuntimeError(
-            "transformWithStateInPandas needs a google.protobuf runtime; "
-            "none importable and no bundled runtime found (see pbvendor)"
-        )
-
-    df = stream.df
-    dcols = list(cols)
-    out_schema = ", ".join(f"{k} {t}" for k, t in df.dtypes)
-    ttl_ms = int(duration_ns(ttl) // 1_000_000) if ttl else None
-    if ttl_ms is not None and not df.isStreaming:
-        raise ValueError("ttl applies to streaming inputs only")
-    if ttl_ms is not None:
-        df = df.withWatermark(stream.ts_col, watermark_delay)
-    ts_col = stream.ts_col
-    sort_cols = [ts_col] + ([stream.order_col] if stream.order_col else [])
-    out_cols = [k for k, _ in df.dtypes]
-
-    class _DistinctProcessor(StatefulProcessor):
-        def init(self, handle):
-            self.handle = handle
-            # value = the armed timer's expiry (-1 when no TTL): needed to
-            # delete the previous timer when refreshing on new activity
-            self.seen = handle.getValueState("seen", "timer_ms long")
-
-        def handleInputRows(self, key, rows, timer_values):
-            chunks = [pdf for pdf in rows if len(pdf)]
-            if not chunks:
-                return
-            all_rows = pd.concat(chunks).sort_values(sort_cols, kind="mergesort")
-            first = all_rows.iloc[:1]
-            last_ts_ms = int(all_rows[ts_col].astype("int64").max() // 1_000_000)
-
-            def arm(prev_timer_ms: int) -> int:
-                if ttl_ms is None:
-                    return -1
-                # expiry must sit strictly above the current watermark or
-                # the timer would fire in the very next batch
-                expiry = max(
-                    last_ts_ms + ttl_ms,
-                    timer_values.getCurrentWatermarkInMs() + 1,
-                )
-                if prev_timer_ms >= 0 and prev_timer_ms != expiry:
-                    self.handle.deleteTimer(prev_timer_ms)
-                if prev_timer_ms != expiry:
-                    self.handle.registerTimer(expiry)
-                return expiry
-
-            if self.seen.exists():
-                prev = self.seen.get()[0]
-                new_timer = arm(prev)
-                if new_timer != prev:
-                    self.seen.update((new_timer,))
-            else:
-                self.seen.update((arm(-1),))
-                yield first[out_cols]
-
-        def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-            # (camelCase params: the runner invokes this with keyword
-            # arguments matching the StatefulProcessor base signature.)
-            # Watermark passed last activity + ttl: forget the key (it may
-            # re-emit); the fired timer is removed by the engine.
-            self.seen.clear()
-            return iter([])
-
-        def close(self):
-            pass
-
-    out = df.groupBy(*[F.col(c) for c in dcols]).transformWithStateInPandas(
-        statefulProcessor=_DistinctProcessor(),
-        outputStructType=out_schema,
-        outputMode="Append",
-        timeMode="EventTime" if ttl_ms is not None else "None",
-    )
-    out._varpulis_session_confs = dict(_TWS_CONFS)
-    s = Stream(out, ts_col=stream.ts_col, keys=stream.keys)
-    s.session_confs.update(_TWS_CONFS)
-    return s
-
-
-def limit_streaming(
-    stream: Stream, n: int, per_key: bool = True, engine: str = "auto"
-) -> Stream:
+def limit_streaming(stream: Stream, n: int, per_key: bool = True) -> Stream:
     """Streaming `.limit(n)`: pass the first n events.
 
     The reference keeps ONE global LimitState counter (types.rs:296-299)
     regardless of `partition by` — `Stream.limit`'s streaming dispatch
     therefore passes ``per_key=False`` so batch and streaming modes of the
     same program agree (ADVICE r6).  ``per_key=True`` (default when called
-    directly) is the keyed extension: first n per partition key.
-
-    `engine`: "pandas" = applyInPandasWithState (default); "tws" =
-    transformWithStateInPandas (the counter in a ValueState); "auto" =
-    tws only when VARPULIS_TWS_LIMIT=1 and the runtime is available."""
-    import os as _os
-    import pickle
-
+    directly) is the keyed extension: first n per partition key."""
     import pandas as pd
 
     from pyspark.sql.streaming.state import GroupStateTimeout
-
-    if engine == "auto":
-        engine = (
-            "tws" if _os.environ.get("VARPULIS_TWS_LIMIT") == "1"
-            else "pandas"
-        )
-    if engine == "tws":
-        return _limit_streaming_tws(stream, n, per_key)
 
     df = stream.df
     keys = (stream.keys or []) if per_key else []
@@ -1610,69 +978,6 @@ def limit_streaming(
         run, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
     )
     return Stream(out, ts_col=stream.ts_col, keys=stream.keys)
-
-
-def _limit_streaming_tws(
-    stream: Stream, n: int, per_key: bool = True
-) -> Stream:
-    """transformWithStateInPandas twin of limit_streaming: the per-key
-    seen-counter (LimitState, types.rs:296-299) in a native ValueState —
-    no pickle, no timers (count-triggered like the count window)."""
-    import pandas as pd
-
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    from varpulis_spark import pbvendor
-
-    if not pbvendor.tws_available():
-        raise RuntimeError(
-            "transformWithStateInPandas needs a google.protobuf runtime; "
-            "none importable and no bundled runtime found (see pbvendor)"
-        )
-    df = stream.df
-    keys = (stream.keys or []) if per_key else []
-    gdf = df if keys else df.withColumn("__g", F.lit(0))
-    gkeys = keys or ["__g"]
-    sort_cols = [stream.ts_col] + (
-        [stream.order_col] if stream.order_col else []
-    )
-    out_cols = [k for k, _t in gdf.dtypes if k != "__g"]
-    out_schema = ", ".join(f"{k} {t}" for k, t in gdf.dtypes if k != "__g")
-
-    class _LimitProcessor(StatefulProcessor):
-        def init(self, handle):
-            self.seen = handle.getValueState("seen", "seen long")
-
-        def handleInputRows(self, key, rows, timer_values):
-            seen = self.seen.get()[0] if self.seen.exists() else 0
-            chunks = [pdf for pdf in rows if len(pdf)]
-            if not chunks:
-                return
-            all_rows = pd.concat(chunks).sort_values(
-                sort_cols, kind="mergesort"
-            )
-            if "__g" in all_rows.columns:
-                all_rows = all_rows.drop(columns="__g")
-            take = max(0, n - seen)
-            self.seen.update((seen + min(take, len(all_rows)),))
-            if take:
-                yield all_rows.iloc[:take]
-            else:
-                yield pd.DataFrame(columns=out_cols)
-
-        def close(self):
-            pass
-
-    out = gdf.groupBy(*[F.col(k) for k in gkeys]).transformWithStateInPandas(
-        statefulProcessor=_LimitProcessor(),
-        outputStructType=out_schema,
-        outputMode="Append",
-        timeMode="None",
-    )
-    out._varpulis_session_confs = dict(_TWS_CONFS)
-    s = Stream(out, ts_col=stream.ts_col, keys=stream.keys)
-    s.session_confs.update(_TWS_CONFS)
-    return s
 
 
 # ---------------------------------------------------------------------------
@@ -1822,7 +1127,6 @@ def _merge_with_run_cap(old_events: list, new_events: list, pattern,
 
 def apply_pattern_streaming(
     stream: Stream, pattern, state_timeout: str | None = None,
-    engine: str = "auto",
 ):
     """Run a SASE+ pattern over a streaming Stream.
 
@@ -1843,13 +1147,6 @@ def apply_pattern_streaming(
     micro-batch boundary). Requires `within` and an upstream
     `.watermark(...)`; the idle-GC `state_timeout` (processing-time) is
     unavailable for such patterns (Spark allows one timeout mode).
-
-    `engine`: "pandas" = applyInPandasWithState (default; hand-rolled
-    setTimeoutTimestamp arm); "tws" = transformWithStateInPandas with
-    NATIVE event-time timers — one registerTimer per pending deadline,
-    ListState row buffer instead of a whole-buffer pickle (requires
-    RocksDB + a protobuf runtime, see pbvendor); "auto" = tws only when
-    VARPULIS_TWS_PATTERN=1 and the runtime is available.
     """
     import pandas as pd
     import pickle
@@ -1865,11 +1162,6 @@ def apply_pattern_streaming(
     # regardless; pass state_timeout only for long-running queries with
     # high key churn.
     timeout_ms = max(1, duration_ns(state_timeout) // 1_000_000) if state_timeout else None
-
-    if engine == "auto":
-        engine = (
-            "tws" if os.environ.get("VARPULIS_TWS_PATTERN") == "1" else "pandas"
-        )
 
     df = stream.df
     ts_col = stream.ts_col
@@ -1896,7 +1188,6 @@ def apply_pattern_streaming(
     state_schema = "buf binary, emitted binary, started long, dropped long, evicted long"
     sort_cols = [ts_col] + ([order_col] if order_col else [])
     within = pattern.within_ns()
-    in_cols = df.columns
 
     # Dedupe on MATCH IDENTITY (the participating events' (ts, order)
     # tuples), not on the projected output — two distinct matches that
@@ -1950,13 +1241,14 @@ def apply_pattern_streaming(
     acc_evicted = sc.accumulator(0)
 
     def _advance(key, old_events, emitted, new_events, wm_ns, counters):
-        """Shared per-invocation core for BOTH stateful engines: merge new
-        events under the run cap, re-enumerate, gate trailing-negation
-        confirmation on the watermark, evict beyond the horizon.
+        """Per-invocation core, shared by the data and the timed-out paths
+        of `run`: merge new events under the run cap, re-enumerate, gate
+        trailing-negation confirmation on the watermark, evict beyond the
+        horizon.
 
         Returns (events, emitted, fresh_rows, pending_min_ns, counters).
         pending_min_ns = earliest unconfirmed deadline (the caller arms a
-        timer/timeout at it), None when nothing is pending."""
+        timeout at it), None when nothing is pending."""
         c_started, c_dropped, c_evicted = counters
         events, d_started, d_dropped, d_evicted = _merge_with_run_cap(
             old_events, new_events, pattern, key, c_started, c_dropped,
@@ -2049,21 +1341,7 @@ def apply_pattern_streaming(
             new_events.extend(evs)
         return new_events
 
-    if engine == "tws":
-        return _apply_pattern_streaming_tws(
-            stream, pattern, df, keys, out_schema, in_cols, has_trailing,
-            _advance, _chunks_to_events,
-            (acc_started, acc_dropped, acc_evicted),
-        )
-
     def run(key, pdfs, state: GroupState):
-        _dbg = os.environ.get("VARPULIS_PATTERN_DEBUG")
-
-        def _log(msg):
-            if _dbg:
-                with open(_dbg, "a") as f:
-                    f.write(msg + "\n")
-
         def _wm_ns() -> int:
             try:
                 return state.getCurrentWatermarkMs() * 1_000_000
@@ -2084,13 +1362,11 @@ def apply_pattern_streaming(
                 # fire once the watermark passes the earliest deadline
                 # (must sit strictly above the current watermark)
                 t = max(-(-pending_min // 1_000_000), wm_ns // 1_000_000 + 1)
-                _log(f"arm timeout key={key} t_ms={t} wm_ms={wm_ns//1_000_000}")
                 state.setTimeoutTimestamp(t)
             elif timeout_ms is not None:
                 state.setTimeoutDuration(timeout_ms)
 
         if state.hasTimedOut:
-            _log(f"timed out key={key}")
             if not has_trailing:
                 state.remove()  # idle-key GC (processing-time timeout)
                 yield pd.DataFrame(columns=list(pattern.emit.keys()))
@@ -2115,10 +1391,6 @@ def apply_pattern_streaming(
         events, emitted, fresh, pending_min, counters = _advance(
             key, old_events, emitted, _chunks_to_events(pdfs), wm_ns, counters
         )
-        _log(
-            f"batch key={key} wm_ms={wm_ns//1_000_000} n_events={len(events)} "
-            f"fresh={len(fresh)} pending={pending_min}"
-        )
         _save(events, emitted, counters, pending_min, wm_ns)
         yield pd.DataFrame(fresh, columns=list(pattern.emit.keys()))
 
@@ -2133,161 +1405,6 @@ def apply_pattern_streaming(
     out_stream = Stream(out, ts_col=stream.ts_col)
     # live BP-01 counters (ExtendedEngineStats, sase.rs:895-903); read
     # `.value` after a micro-batch completes
-    out_stream.run_stats = {
-        "runs_started": acc_started,
-        "runs_dropped": acc_dropped,
-        "runs_evicted": acc_evicted,
-    }
-    return out_stream
-
-
-def _apply_pattern_streaming_tws(
-    stream: Stream, pattern, df, keys, out_schema, in_cols, has_trailing,
-    _advance, _chunks_to_events, accs,
-):
-    """transformWithStateInPandas twin of apply_pattern_streaming — the r11
-    timer-driven migration (VERDICT r10 task 4).
-
-    Arbitrary-state v2 upgrades over the applyInPandasWithState arm:
-    - the event buffer lives in a native row-typed ListState column family
-      (RocksDB-resident) instead of a whole-buffer pickle round-tripped
-      through every micro-batch;
-    - trailing-negation confirmation (sase.rs:675-716) runs on NATIVE
-      event-time timers — one `registerTimer` per pending deadline,
-      `handleExpiredTimer` re-enumerates and emits the now-confirmed
-      matches when the watermark passes. The hand-rolled single-slot
-      `setTimeoutTimestamp` arm tracks only the EARLIEST deadline and
-      re-arms on every invocation; native timers hold one per deadline in
-      the engine's own timer column family.
-
-    Same `_advance` core as the pandas arm, so match semantics (run caps,
-    dedupe identity, eviction, confirmation gating) are shared by
-    construction. Requires RocksDB (query-scoped conf, see start_query)
-    and a protobuf runtime (pbvendor)."""
-    import pickle
-
-    import pandas as pd
-
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    from varpulis_spark import pbvendor
-
-    if not pbvendor.tws_available():
-        raise RuntimeError(
-            "transformWithStateInPandas needs a google.protobuf runtime; "
-            "none importable and no bundled runtime found (see pbvendor)"
-        )
-
-    ts_col = stream.ts_col
-    buf_schema = ", ".join(f"{c} {t}" for c, t in df.dtypes) + ", __ts long"
-    buf_cols = in_cols + ["__ts"]
-    _pd_dtypes = {
-        "tinyint": "int8", "smallint": "int16", "int": "int32",
-        "bigint": "int64", "float": "float32", "double": "float64",
-        "boolean": "bool", "timestamp": "datetime64[us]",
-        "timestamp_ntz": "datetime64[us]",
-    }
-    buf_dtypes = {c: _pd_dtypes[t] for c, t in df.dtypes if t in _pd_dtypes}
-    buf_dtypes["__ts"] = "int64"
-    emit_cols = list(pattern.emit.keys())
-
-    class _PatternProcessor(StatefulProcessor):
-        def init(self, handle):
-            self.handle = handle
-            self.buf = handle.getListState("buf", buf_schema)
-            # emitted dedupe dict + BP-01 counters + armed-timer set
-            self.meta = handle.getValueState(
-                "meta", "emitted binary, cs long, cd long, ce long, armed binary"
-            )
-
-        def _load(self):
-            if not self.meta.exists():
-                return [], {}, (0, 0, 0), set()
-            emitted_pkl, cs, cd, ce, armed_pkl = self.meta.get()
-            events = self._typed_events(list(self.buf.get()))
-            return events, pickle.loads(emitted_pkl), (cs, cd, ce), pickle.loads(armed_pkl)
-
-        def _typed_events(self, tuples: list) -> list:
-            if not tuples:
-                return []
-            pdf = pd.DataFrame(tuples, columns=buf_cols)
-            for c, dt in buf_dtypes.items():
-                try:
-                    pdf[c] = pdf[c].astype(dt)
-                except (TypeError, ValueError):
-                    pass
-            evs = pdf.to_dict("records")
-            for e in evs:
-                e["__ts"] = int(e["__ts"])
-            return evs
-
-        def _save(self, events, emitted, counters, armed):
-            self.meta.update((pickle.dumps(emitted), *counters, pickle.dumps(armed)))
-            self.buf.clear()
-            if events:
-                self.buf.appendList(
-                    [tuple(e.get(c) for c in buf_cols) for e in events]
-                )
-
-        def _arm(self, pending_min, armed: set, wm_ms: int) -> set:
-            armed = {t for t in armed if t > wm_ms}  # fired timers are gone
-            if pending_min is not None:
-                t_ms = max(-(-pending_min // 1_000_000), wm_ms + 1)
-                if t_ms not in armed:
-                    self.handle.registerTimer(t_ms)
-                    armed.add(t_ms)
-            return armed
-
-        def handleInputRows(self, key, rows, timer_values):
-            events, emitted, counters, armed = self._load()
-            try:
-                wm_ms = timer_values.getCurrentWatermarkInMs()
-            except Exception:  # timeMode "None" carries no watermark
-                wm_ms = 0
-            wm_ns = max(wm_ms, 0) * 1_000_000
-            events, emitted, fresh, pending_min, counters = _advance(
-                key, events, emitted, _chunks_to_events(rows), wm_ns, counters
-            )
-            armed = self._arm(pending_min, armed, wm_ms)
-            self._save(events, emitted, counters, armed)
-            yield pd.DataFrame(fresh, columns=emit_cols)
-
-        def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-            # watermark passed a pending confirmation deadline: re-enumerate
-            # with no new events and emit what is now confirmed
-            events, emitted, counters, armed = self._load()
-            wm_ms = timerValues.getCurrentWatermarkInMs()
-            events, emitted, fresh, pending_min, counters = _advance(
-                key, events, emitted, [], max(wm_ms, 0) * 1_000_000, counters
-            )
-            armed = self._arm(pending_min, armed, wm_ms)
-            if events or emitted or pending_min is not None:
-                self._save(events, emitted, counters, armed)
-            else:
-                self.buf.clear()
-                self.meta.clear()
-            yield pd.DataFrame(fresh, columns=emit_cols)
-
-        def close(self):
-            pass
-
-    # EventTime whenever the input is watermarked (not only for trailing
-    # negation): with timeMode="None" getCurrentWatermarkInMs raises and
-    # eviction falls back to the batch-max floor, evicting out-of-order late
-    # events earlier than the applyInPandasWithState arm does on the same
-    # watermarked input (ADVICE r11).
-    out = df.groupBy(*[F.col(k) for k in keys]).transformWithStateInPandas(
-        statefulProcessor=_PatternProcessor(),
-        outputStructType=out_schema,
-        outputMode="Append",
-        timeMode=(
-            "EventTime" if (has_trailing or stream._watermarked) else "None"
-        ),
-    )
-    out._varpulis_session_confs = dict(_TWS_CONFS)
-    out_stream = Stream(out, ts_col=stream.ts_col)
-    out_stream.session_confs.update(_TWS_CONFS)
-    acc_started, acc_dropped, acc_evicted = accs
     out_stream.run_stats = {
         "runs_started": acc_started,
         "runs_dropped": acc_dropped,

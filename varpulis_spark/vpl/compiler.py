@@ -3094,9 +3094,8 @@ def run_program(
         # (aggregates carry window_end; the reference's events all have ts)
         ts_name = stream.ts_col
         if ts_name not in out.df.columns and out.ts_col in out.df.columns:
-            # _with (not a bare Stream(...)) so session_confs (e.g. the TWS
-            # RocksDB provider) and the watermark flag survive the re-wrap
-            # (ADVICE r11 medium)
+            # _with (not a bare Stream(...)) so the watermark flag survives
+            # the re-wrap
             out = out._with(
                 out.df.withColumn(ts_name, F.col(out.ts_col)), ts_col=ts_name
             )
